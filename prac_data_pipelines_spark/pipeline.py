@@ -1,113 +1,170 @@
 """End-to-end pipeline orchestration: the reference's six-step flow
 (extract → operating report → audit → analytics → KPIs → export) restated
-as one lazy DataFrame lineage with explicit materialization points.
+as one DataFrame lineage with explicit materialization points.
 
 The view dictionary (SURVEY §2.11) is the product surface: named derived
 views consumed by the report sinks and the dashboard.
 
-Scale notes:
-- The master and the balance-enriched charges frame are each consumed by
-  many downstream views → ``cache()`` them once (the one optimization
-  Catalyst will not infer; reference re-uses one in-memory frame the same
-  way, SURVEY §4).
-- Every view is computed per currency by ONE grouped pass where possible;
-  the per-currency split happens at the cached lineage, not at the scan.
+Materialization points — the reference computes each derived pandas frame
+once and then writes, draws and serves it; ``run_pipeline`` does the same
+with three ``localCheckpoint`` points:
+
+1. the master (the 10-table join lineage), consumed by every view;
+2. the balance-enriched charges frame, consumed by most of them;
+3. each report-sized view (aggregated by currency, bucket, concept,
+   client or column), checkpointed where its family is built.
+
+The report-sized views are planned and checkpointed side by side on a
+small thread pool (under the caller's job group), while the calling
+thread plans the row-level views: building a plan is a chain of py4j
+round trips, and the tiny aggregates leave the cores idle between jobs.
+
+A checkpointed frame's plan is a ``LogicalRDD`` leaf, so a consumer's
+``limit().toPandas()`` neither re-plans the join lineage nor re-runs the
+aggregate (a ``.cache()`` lookup still canonicalizes the whole deep plan
+on every action, and the cached master pins its broadcast dimension
+tables). Row-level views (``reporte_cxc``, ``movimientos_*``,
+``por_acreditar``, ``registros_*``, ``saldos_cliente``, ``sin_*``, the
+``*_atipicas/os`` audits) stay lazy over the checkpointed frames: they
+scale with the fact table and go to Parquet at scale.
+
+Trade-offs: local checkpoints live in executor block storage and are not
+recomputed when an executor is lost — the same trade ``incremental.py``,
+``streaming/upsert.py`` and ``operators/sorting.py`` make. The views are a
+snapshot of the sources as of the call: new data needs a new
+``run_pipeline`` call.
+
+Every view is computed per currency by ONE grouped pass where possible;
+the per-currency split happens at the checkpointed lineage, not at the
+scan.
 """
 
 from __future__ import annotations
 
 import argparse
+from concurrent.futures import Future, ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .operators.profile import column_profile
 from .operators.stats import zscore_columns
+from .operators.windows import band_groups
 from .plans import analytics as pa
+from .plans import auditor as au
 from .plans import kpis as pk
 from .plans import reporte as pr
-from .plans.master import AS_OF_CXC, cxc_master_from_tpch
+from .plans.master import ACTIVO, AS_OF_CXC, cxc_master_from_tpch
 from .session import get_spark
 
 CURRENCIES = ("MXN", "USD")
+# threads planning and checkpointing report-sized views side by side
+_SNAPSHOT_THREADS = 4
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str,
                  as_of: str = AS_OF_CXC) -> dict[str, DataFrame]:
-    """Build the full named-view dictionary over the CxC master."""
-    master = cxc_master_from_tpch(spark, sf_dir).cache()
-    charges = pr.with_cycle_metrics(pr.saldo_factura(master), as_of).cache()
+    """Build the full named-view dictionary over the CxC master; runs the
+    master, charges and report-sized views eagerly (module docstring)."""
+    master = cxc_master_from_tpch(spark, sf_dir).localCheckpoint()
+    charges = pr.with_cycle_metrics(
+        pr.saldo_factura(master), as_of).localCheckpoint()
 
-    views: dict[str, DataFrame] = {}
+    with ThreadPoolExecutor(_SNAPSHOT_THREADS) as pool:
 
-    # Operating report family
-    views["reporte_cxc"] = charges
-    views["movimientos_abiertos_cxc"] = charges.filter("SALDO_FACTURA > 0")
-    views["movimientos_cerrados_cxc"] = charges.filter("SALDO_FACTURA <= 0")
-    views["movimientos_abiertos_con_pagos"] = \
-        pr.movimientos_con_pagos(master, charges, abiertos=True)
-    views["movimientos_cerrados_con_pagos"] = \
-        pr.movimientos_con_pagos(master, charges, abiertos=False)
-    views["por_acreditar"] = pr.active(master).filter("TIPO_IMPTE = 'A'")
-    # negated active-filter, not subtract(): a set-difference would shuffle
-    # the full row width to deduplicate what a predicate already expresses
-    from pyspark.sql import functions as F
-    from .plans.master import ACTIVO
-    views["registros_cancelados_cxc"] = master.filter(~F.expr(ACTIVO))
-    # Raw master with presentation banding (the reference's registros_totales)
-    from .operators.windows import band_groups
-    _grp = F.coalesce("DOCTO_CC_ACR_ID", "DOCTO_CC_ID")
-    views["registros_totales_cxc"] = band_groups(
-        master, group_key=_grp,
-        order_by=[_grp.asc(), F.col("TIPO_IMPTE").asc(), F.col("DOCTO_CC_ID").asc()],
-        partition_by=["CLIENTE_ID"])
-    views["saldos_cliente"] = pr.saldo_cliente(master)
-    # Full report + z-score enrichment for amount, collection delay, and
-    # overdue age (the reference's movimientos_totales surface).
-    from pyspark.sql import functions as F
-    totales = zscore_columns(
-        charges, "IMPORTE", subset=charges["CONCEPTO"].contains("VENTA"),
-        z_col="Z_IMPORTE", flag_col="ES_ATIPICO_IMPORTE")
-    totales = zscore_columns(
-        totales, "DELTA_RECAUDO", subset=F.col("DELTA_RECAUDO").isNotNull(),
-        z_col="Z_RECAUDO", flag_col="ES_ATIPICO_RECAUDO")
-    totales = zscore_columns(
-        totales, "DELTA_MORA", subset=F.col("DELTA_MORA").isNotNull(),
-        z_col="Z_MORA", flag_col="ES_ATIPICO_MORA")
-    views["movimientos_totales_cxc"] = totales
+        def snapshot(plan, *args, **kwargs) -> Future:
+            """Build ``plan(*args, **kwargs)`` and checkpoint it on a pool
+            thread, under the caller's job group, local properties and
+            session tags."""
+            return pool.submit(inheritable_thread_target(spark)(
+                lambda: plan(*args, **kwargs).localCheckpoint()))
 
-    # Analytics family (per currency)
-    for m in CURRENCIES:
-        suf = m.lower()
-        views[f"antiguedad_cartera_{suf}"] = pa.antiguedad_cartera(master, as_of, m, charges=charges)
-        views[f"antiguedad_por_cliente_{suf}"] = \
-            pa.antiguedad_por_cliente(master, as_of, m, charges=charges)
-        views[f"cartera_vencida_vs_vigente_{suf}"] = \
-            pa.cartera_vencida_vs_vigente(master, as_of, m, charges=charges)
-        views[f"resumen_concepto_cxc_{suf}"] = pa.resumen_por_concepto(master, m)
-        views[f"resumen_cancelados_cxc_{suf}"] = pa.resumen_cancelados(master, m)
-        views[f"resumen_ajustes_cxc_{suf}"] = pa.resumen_ajustes(master, m)
+        views: dict[str, DataFrame | Future] = {}
 
-    # KPI family
-    views["kpis_resumen"] = pk.kpi_rows(master, as_of, charges=charges)
-    for m in CURRENCIES:
-        suf = m.lower()
-        views[f"kpis_concentracion_{suf}"] = pk.concentracion_abc(master, m, charges=charges)
-        views[f"kpis_limite_credito_{suf}"] = pk.limite_credito(master, m, charges=charges)
-        views[f"kpis_morosidad_cliente_{suf}"] = pk.morosidad_por_cliente(master, as_of, m, charges=charges)
+        # Analytics family (per currency; report-sized: checkpointed)
+        for m in CURRENCIES:
+            suf = m.lower()
+            views[f"antiguedad_cartera_{suf}"] = snapshot(
+                pa.antiguedad_cartera, master, as_of, m, charges=charges)
+            views[f"antiguedad_por_cliente_{suf}"] = snapshot(
+                pa.antiguedad_por_cliente, master, as_of, m, charges=charges)
+            views[f"cartera_vencida_vs_vigente_{suf}"] = snapshot(
+                pa.cartera_vencida_vs_vigente, master, as_of, m,
+                charges=charges)
+            views[f"resumen_concepto_cxc_{suf}"] = snapshot(
+                pa.resumen_por_concepto, master, m)
+            views[f"resumen_cancelados_cxc_{suf}"] = snapshot(
+                pa.resumen_cancelados, master, m)
+            views[f"resumen_ajustes_cxc_{suf}"] = snapshot(
+                pa.resumen_ajustes, master, m)
 
-    # Audit family
-    from .plans import auditor as au
-    views["auditoria_nulos"] = pa.auditoria_nulos(master)
-    activos = pr.active(master)
-    views["sin_tipo_cliente"] = activos.filter(F.col("TIPO_CLIENTE").isNull())
-    views["sin_vendedor"] = activos.filter(F.col("VENDEDOR").isNull())
-    views["importes_atipicos"] = au.importes_atipicos(charges)
-    views["recaudos_atipicos"] = au.recaudos_atipicos(charges)
-    views["moras_atipicas"] = au.moras_atipicas(charges)
-    views["resumen_auditoria"] = au.resumen_auditoria(master, charges)
-    views["calidad_datos"] = column_profile(master)
+        # KPI family (report-sized: checkpointed)
+        views["kpis_resumen"] = snapshot(
+            pk.kpi_rows, master, as_of, charges=charges)
+        for m in CURRENCIES:
+            suf = m.lower()
+            views[f"kpis_concentracion_{suf}"] = snapshot(
+                pk.concentracion_abc, master, m, charges=charges)
+            views[f"kpis_limite_credito_{suf}"] = snapshot(
+                pk.limite_credito, master, m, charges=charges)
+            views[f"kpis_morosidad_cliente_{suf}"] = snapshot(
+                pk.morosidad_por_cliente, master, as_of, m, charges=charges)
 
-    return views
+        # Audit family: column/summary audits checkpointed, row audits lazy
+        views["auditoria_nulos"] = snapshot(pa.auditoria_nulos, master)
+        activos = pr.active(master)
+        views["sin_tipo_cliente"] = activos.filter(
+            F.col("TIPO_CLIENTE").isNull())
+        views["sin_vendedor"] = activos.filter(F.col("VENDEDOR").isNull())
+        views["importes_atipicos"] = au.importes_atipicos(charges)
+        views["recaudos_atipicos"] = au.recaudos_atipicos(charges)
+        views["moras_atipicas"] = au.moras_atipicas(charges)
+        views["resumen_auditoria"] = snapshot(
+            au.resumen_auditoria, master, charges)
+        views["calidad_datos"] = snapshot(column_profile, master)
+
+        # Operating report family (row-level: lazy), planned on this
+        # thread while the pool runs; it leads the dictionary
+        report: dict[str, DataFrame] = {}
+        report["reporte_cxc"] = charges
+        report["movimientos_abiertos_cxc"] = charges.filter("SALDO_FACTURA > 0")
+        report["movimientos_cerrados_cxc"] = charges.filter("SALDO_FACTURA <= 0")
+        report["movimientos_abiertos_con_pagos"] = \
+            pr.movimientos_con_pagos(master, charges, abiertos=True)
+        report["movimientos_cerrados_con_pagos"] = \
+            pr.movimientos_con_pagos(master, charges, abiertos=False)
+        report["por_acreditar"] = pr.active(master).filter("TIPO_IMPTE = 'A'")
+        # negated active-filter, not subtract(): a set-difference would
+        # shuffle the full row width to deduplicate what a predicate
+        # already expresses
+        report["registros_cancelados_cxc"] = master.filter(~F.expr(ACTIVO))
+        # Raw master with presentation banding (the reference's
+        # registros_totales)
+        _grp = F.coalesce("DOCTO_CC_ACR_ID", "DOCTO_CC_ID")
+        report["registros_totales_cxc"] = band_groups(
+            master, group_key=_grp,
+            order_by=[_grp.asc(), F.col("TIPO_IMPTE").asc(),
+                      F.col("DOCTO_CC_ID").asc()],
+            partition_by=["CLIENTE_ID"])
+        report["saldos_cliente"] = pr.saldo_cliente(master)
+        # Full report + z-score enrichment for amount, collection delay,
+        # and overdue age (the reference's movimientos_totales surface).
+        totales = zscore_columns(
+            charges, "IMPORTE", subset=charges["CONCEPTO"].contains("VENTA"),
+            z_col="Z_IMPORTE", flag_col="ES_ATIPICO_IMPORTE")
+        totales = zscore_columns(
+            totales, "DELTA_RECAUDO",
+            subset=F.col("DELTA_RECAUDO").isNotNull(),
+            z_col="Z_RECAUDO", flag_col="ES_ATIPICO_RECAUDO")
+        totales = zscore_columns(
+            totales, "DELTA_MORA", subset=F.col("DELTA_MORA").isNotNull(),
+            z_col="Z_MORA", flag_col="ES_ATIPICO_MORA")
+        report["movimientos_totales_cxc"] = totales
+
+        return {**report, **{
+            name: v.result() if isinstance(v, Future) else v
+            for name, v in views.items()}}
 
 
 def main() -> int:

@@ -14,12 +14,20 @@ from pyspark.sql import functions as F
 
 from ..config import CREDITO_UMBRAL_ALTO, CREDITO_UMBRAL_CRITICO, KPI_PERIODO_DIAS
 from ..operators.rounding import r2, r4
+from ..operators.sorting import dual_sort_keys
 from ..operators.windows import pareto_abc
 from .reporte import active, monto, saldo_factura, with_cycle_metrics
 
 
 def _es_venta():
     return (F.col("TIPO_IMPTE") == "C") & F.col("CONCEPTO").contains("VENTA")
+
+
+def _por_saldo():
+    """Per-client row order (reference ``src/kpis.py:216-220,281-285``):
+    the stratified dual sort, CLIENTE_ID as the total-order tiebreaker."""
+    return [*dual_sort_keys(F.col("SALDO_PENDIENTE"), F.col("NOMBRE_CLIENTE")),
+            F.col("CLIENTE_ID").asc()]
 
 
 def kpi_scalars(master: DataFrame, as_of: str,
@@ -146,7 +154,7 @@ def limite_credito(master: DataFrame, moneda: str = "MXN",
         "CLIENTE_ID", "NOMBRE_CLIENTE", "LIMITE_CREDITO", "SALDO_PENDIENTE",
         util.alias("UTILIZACION_PCT"), disponible.alias("DISPONIBLE"),
         alerta.alias("ALERTA"),
-    )
+    ).orderBy(*_por_saldo())
 
 
 def morosidad_por_cliente(master: DataFrame, as_of: str,
@@ -175,4 +183,5 @@ def morosidad_por_cliente(master: DataFrame, as_of: str,
             F.max(F.when(vencida, F.col("DELTA_MORA"))).cast("long")
             .alias("MAX_DIAS_VENCIDO"),
         )
+        .orderBy(*_por_saldo())
     )

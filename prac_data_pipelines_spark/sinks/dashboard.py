@@ -6,12 +6,17 @@ Neither streamlit nor plotly exists in this container, so the same
 surface is served with ``http.server``: five navigable HTML pages (
 resumen / cartera / clientes / kpis / auditoria) rendered from collected
 report-sized frames, with KPI cards, inline SVG charts (donut, bars,
-Pareto) and styled tables, plus a ``/refresh`` endpoint that re-collects
-the views from the live SparkSession — the stdlib equivalent of the
-reference's cache-clear + rerun button.
+Pareto) and styled tables, plus a ``/refresh`` endpoint that drops the
+collected frames — the stdlib equivalent of the reference's cache-clear +
+rerun button.
 
-The engine side is unchanged: views stay lazy DataFrames until a page
-renders, and only report-sized heads are ever collected.
+The views are the snapshot ``run_pipeline`` materialized: report-sized
+views are checkpointed, row-level views are lazy over the checkpointed
+master and charges. A page collects bounded, engine-filtered heads of
+them; ``/refresh`` re-reads that snapshot (new source data needs a new
+``run_pipeline`` and a new server). Requests render concurrently
+(``ThreadingHTTPServer``), so a request's filters travel through the
+render calls, never through shared state.
 """
 
 from __future__ import annotations
@@ -100,6 +105,14 @@ def apply_view_filters(df: DataFrame | None,
 
 
 FILTER_KEYS = ("cliente", "vendedor", "buscar", "mora", "solo_saldo")
+# the columns each filter reads in ``apply_view_filters``
+_FILTER_COLUMNS = {
+    "cliente": ("NOMBRE_CLIENTE",),
+    "vendedor": ("VENDEDOR",),
+    "buscar": ("NOMBRE_CLIENTE",),
+    "mora": ("CATEGORIA_MORA",),
+    "solo_saldo": ("SALDO_TOTAL", "SALDO_PENDIENTE", "SALDO_FACTURA"),
+}
 
 
 def _fmt(v) -> str:
@@ -230,40 +243,49 @@ def kpi_cards(pdf) -> str:
 
 
 class Dashboard:
-    """Collects views lazily, renders the five pages, serves them."""
+    """Collects bounded view heads on demand, renders the five pages,
+    serves them."""
 
     def __init__(self, views: dict[str, DataFrame]) -> None:
         self._views = views
         self._cache: dict[tuple, object] = {}
-        self._filters: dict[str, list[str]] = {}
 
-    def _filter_key(self) -> tuple:
-        return tuple((k, tuple(v)) for k, v in sorted(self._filters.items()))
-
-    def _pdf(self, name: str, limit: int = 500):
-        key = (name, self._filter_key())
-        if key not in self._cache:
-            df = apply_view_filters(self._views.get(name), self._filters)
-            self._cache[key] = (df.limit(limit).toPandas()
-                                if df is not None else None)
-        return self._cache[key]
+    def _pdf(self, name: str, filters: dict[str, list[str]],
+             limit: int = 500):
+        """The view's filtered head, cached per view and per the filters
+        that apply to it: a filter on a column the view lacks is skipped
+        by ``apply_view_filters``, so it does not split the cache."""
+        df = self._views.get(name)
+        if df is None:
+            return None
+        cols = set(df.columns)
+        key = (name, tuple((k, tuple(v)) for k, v in sorted(filters.items())
+                           if cols.intersection(_FILTER_COLUMNS[k])))
+        # read once into a local: a concurrent /refresh may clear the cache
+        # between a check and a second lookup
+        pdf = self._cache.get(key)
+        if pdf is None:
+            pdf = self._cache[key] = (apply_view_filters(df, filters)
+                                      .limit(limit).toPandas())
+        return pdf
 
     def refresh(self) -> None:
+        """Drop the collected heads; the next pages re-read the snapshot."""
         self._cache.clear()
 
-    def _filter_form(self, page: str) -> str:
-        """GET form preserving current filter state (the widget layer of the
-        reference's sidebar; distinct-value suggestion lists are the O6
-        operator collected bounded)."""
-        buscar = html.escape((self._filters.get("buscar") or [""])[0])
-        solo = ((self._filters.get("solo_saldo") or ["0"])[0]
+    def _filter_form(self, page: str, filters: dict[str, list[str]]) -> str:
+        """GET form preserving the request's filter state (the widget layer
+        of the reference's sidebar; distinct-value suggestion lists are the
+        O6 operator collected bounded)."""
+        buscar = html.escape((filters.get("buscar") or [""])[0])
+        solo = ((filters.get("solo_saldo") or ["0"])[0]
                 in ("1", "true", "on"))
-        cliente = html.escape((self._filters.get("cliente") or [""])[0])
-        vendedor = html.escape((self._filters.get("vendedor") or [""])[0])
+        cliente = html.escape((filters.get("cliente") or [""])[0])
+        vendedor = html.escape((filters.get("vendedor") or [""])[0])
         options = "".join(
             f'<option value="{html.escape(str(v))}"/>'
             for v in self._distinct("NOMBRE_CLIENTE"))
-        moras_sel = set(self._filters.get("mora") or [])
+        moras_sel = set(filters.get("mora") or [])
         mora_opts = "".join(
             f'<option value="{html.escape(str(v))}" '
             f'{"selected" if str(v) in moras_sel else ""}>'
@@ -288,8 +310,9 @@ class Dashboard:
         ``dashboard/data_loader.py:121-146``; SURVEY O6) — engine-side
         distinct + orderBy, bounded collect, cached unfiltered."""
         key = ("_distinct", col)
-        if key not in self._cache:
-            vals: list[str] = []
+        vals = self._cache.get(key)
+        if vals is None:
+            vals = []
             for df in self._views.values():
                 if col in df.columns:
                     vals = [r[0] for r in (df.select(col).where(
@@ -297,12 +320,12 @@ class Dashboard:
                         .limit(limit).collect())]
                     break
             self._cache[key] = vals
-        return self._cache[key]  # type: ignore[return-value]
+        return vals  # type: ignore[return-value]
 
     # -- page renderers -----------------------------------------------------
 
-    def _donut_items(self, view: str):
-        pdf = self._pdf(view)
+    def _donut_items(self, view: str, filters: dict[str, list[str]]):
+        pdf = self._pdf(view, filters)
         if pdf is None or pdf.empty:
             return []
         lab = "ESTATUS" if "ESTATUS" in pdf.columns else pdf.columns[0]
@@ -312,8 +335,8 @@ class Dashboard:
                 for _, r in pdf.iterrows()
                 if str(r[lab]).strip().upper() != "TOTAL"]
 
-    def _aging_items(self, view: str):
-        pdf = self._pdf(view)
+    def _aging_items(self, view: str, filters: dict[str, list[str]]):
+        pdf = self._pdf(view, filters)
         if pdf is None or pdf.empty:
             return []
         return [(str(r["RANGO"]), float(r["SALDO_PENDIENTE"] or 0),
@@ -321,44 +344,44 @@ class Dashboard:
                 for _, r in pdf.iterrows()
                 if str(r["RANGO"]).strip().upper() != "TOTAL"]
 
-    def page_resumen(self) -> str:
+    def page_resumen(self, filters: dict[str, list[str]]) -> str:
         out = ["<h1>Resumen Ejecutivo — Cuentas por Cobrar</h1>"]
-        out.append(kpi_cards(self._pdf("kpis_resumen")))
-        items = self._donut_items("cartera_vencida_vs_vigente_mxn")
+        out.append(kpi_cards(self._pdf("kpis_resumen", filters)))
+        items = self._donut_items("cartera_vencida_vs_vigente_mxn", filters)
         if items:
             out.append("<h2>Composicion de cartera (MXN)</h2>")
             out.append(svg_donut(items))
         out.append("<h2>Top clientes por saldo</h2>")
-        conc = self._pdf("kpis_concentracion_mxn")
+        conc = self._pdf("kpis_concentracion_mxn", filters)
         out.append(table_html(conc.head(10) if conc is not None else None, 10))
         return "".join(out)
 
-    def page_cartera(self) -> str:
+    def page_cartera(self, filters: dict[str, list[str]]) -> str:
         out = ["<h1>Cartera &amp; Antiguedad</h1>"]
-        items = self._aging_items("antiguedad_cartera_mxn")
+        items = self._aging_items("antiguedad_cartera_mxn", filters)
         if items:
             out.append("<h2>Distribucion por antiguedad (MXN)</h2>")
             out.append(svg_barh(items))
-        out.append(table_html(self._pdf("antiguedad_cartera_mxn")))
-        d = self._donut_items("cartera_vencida_vs_vigente_mxn")
+        out.append(table_html(self._pdf("antiguedad_cartera_mxn", filters)))
+        d = self._donut_items("cartera_vencida_vs_vigente_mxn", filters)
         if d:
             out.append("<h2>Vencida vs vigente (MXN)</h2>")
             out.append(svg_donut(d))
-        out.append(table_html(self._pdf("cartera_vencida_vs_vigente_mxn")))
+        out.append(table_html(self._pdf("cartera_vencida_vs_vigente_mxn", filters)))
         return "".join(out)
 
-    def page_clientes(self) -> str:
+    def page_clientes(self, filters: dict[str, list[str]]) -> str:
         out = ["<h1>Analisis por Cliente</h1>"]
         out.append("<h2>Antiguedad por cliente (MXN)</h2>")
-        out.append(table_html(self._pdf("antiguedad_por_cliente_mxn")))
+        out.append(table_html(self._pdf("antiguedad_por_cliente_mxn", filters)))
         out.append("<h2>Morosidad por cliente (MXN)</h2>")
-        out.append(table_html(self._pdf("kpis_morosidad_cliente_mxn")))
+        out.append(table_html(self._pdf("kpis_morosidad_cliente_mxn", filters)))
         return "".join(out)
 
-    def page_kpis(self) -> str:
+    def page_kpis(self, filters: dict[str, list[str]]) -> str:
         out = ["<h1>KPIs Estrategicos</h1>"]
-        out.append(table_html(self._pdf("kpis_resumen")))
-        conc = self._pdf("kpis_concentracion_mxn")
+        out.append(table_html(self._pdf("kpis_resumen", filters)))
+        conc = self._pdf("kpis_concentracion_mxn", filters)
         if conc is not None and not conc.empty:
             top = conc[conc.iloc[:, 0].astype(str).str.upper() != "TOTAL"]
             if "NOMBRE_CLIENTE" in top.columns and "PCT_ACUMULADO" in top.columns:
@@ -372,35 +395,35 @@ class Dashboard:
                     [float(v) for v in top[val_col]],
                     [100 * float(v) for v in top["PCT_ACUMULADO"]]))
         out.append("<h2>Limite de credito (MXN)</h2>")
-        out.append(table_html(self._pdf("kpis_limite_credito_mxn")))
+        out.append(table_html(self._pdf("kpis_limite_credito_mxn", filters)))
         return "".join(out)
 
-    def page_auditoria(self) -> str:
+    def page_auditoria(self, filters: dict[str, list[str]]) -> str:
         out = ["<h1>Auditoria</h1>"]
         out.append("<h2>Calidad de datos</h2>")
-        out.append(table_html(self._pdf("calidad_datos")))
+        out.append(table_html(self._pdf("calidad_datos", filters)))
         out.append("<h2>Nulos</h2>")
-        out.append(table_html(self._pdf("auditoria_nulos")))
+        out.append(table_html(self._pdf("auditoria_nulos", filters)))
         out.append("<h2>Importes atipicos</h2>")
-        out.append(table_html(self._pdf("importes_atipicos")))
+        out.append(table_html(self._pdf("importes_atipicos", filters)))
         return "".join(out)
 
     def render(self, page: str,
                filters: dict[str, list[str]] | None = None) -> str:
-        self._filters = {k: v for k, v in (filters or {}).items()
-                         if k in FILTER_KEYS and any(v)}
+        filters = {k: v for k, v in (filters or {}).items()
+                   if k in FILTER_KEYS and any(v)}
         body = {
             "resumen": self.page_resumen,
             "cartera": self.page_cartera,
             "clientes": self.page_clientes,
             "kpis": self.page_kpis,
             "auditoria": self.page_auditoria,
-        }[page]()
+        }[page](filters)
         nav = "".join(
             f'<a href="/{slug}" class="{"active" if slug == page else ""}">'
             f"{title}</a>" for slug, title in PAGES)
         nav += '<a href="/refresh">Refrescar datos</a>'
-        form = self._filter_form(page)
+        form = self._filter_form(page, filters)
         return (f"<!DOCTYPE html><html><head><meta charset='utf-8'>"
                 f"<title>Dashboard CxC</title><style>{_CSS}</style></head>"
                 f"<body><nav>{nav}</nav><main>{form}{body}</main></body></html>")

@@ -3,17 +3,18 @@ from the live view dictionary, fetched like a browser would."""
 
 from __future__ import annotations
 
+import urllib.parse
 import urllib.request
+from concurrent.futures import ThreadPoolExecutor
+from html.parser import HTMLParser
 
 import pytest
 
 
 @pytest.fixture(scope="module")
-def dash_server(spark, sf_dir):
-    from prac_data_pipelines_spark.pipeline import run_pipeline
+def dash_server(views):
     from prac_data_pipelines_spark.sinks.dashboard import serve_dashboard
 
-    views = run_pipeline(spark, sf_dir)
     server, port = serve_dashboard(views)
     yield f"http://127.0.0.1:{port}"
     server.shutdown()
@@ -130,3 +131,86 @@ def test_filter_form_preserves_state(dash_server):
     assert 'value="abc"' in body
     assert "checked" in body
     assert "dl_clientes" in body  # distinct-value suggestions (O6 widget)
+
+
+class _Tables(HTMLParser):
+    """(headers, rows) of every <table> after the filter form; rows are
+    (is_total, cells)."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.tables: list[tuple[list[str], list]] = []
+        self._row: list[str] | None = None
+        self._total = False
+        self._cell: list[str] | None = None
+
+    def handle_starttag(self, tag, attrs):
+        if tag == "table":
+            self.tables.append(([], []))
+        elif tag == "tr":
+            self._row, self._total = [], dict(attrs).get("class") == "total"
+        elif tag in ("th", "td"):
+            self._cell = []
+
+    def handle_endtag(self, tag):
+        if tag in ("th", "td") and self._cell is not None:
+            target = self.tables[-1][0] if tag == "th" else self._row
+            target.append("".join(self._cell))
+            self._cell = None
+        elif tag == "tr" and self._row:
+            self.tables[-1][1].append((self._total, self._row))
+            self._row = None
+
+    def handle_data(self, data):
+        if self._cell is not None:
+            self._cell.append(data)
+
+
+def _client_cells(body: str) -> list[str]:
+    """NOMBRE_CLIENTE of every non-TOTAL table row of a page."""
+    parser = _Tables()
+    parser.feed(body.split("</form>", 1)[1])
+    return [cells[headers.index("NOMBRE_CLIENTE")]
+            for headers, rows in parser.tables if "NOMBRE_CLIENTE" in headers
+            for total, cells in rows if not total]
+
+
+def test_concurrent_filtered_requests_keep_their_filters(dash_server, views):
+    # ThreadingHTTPServer renders requests side by side: each page must
+    # render with its own request's filters
+    names = [r[0] for r in views["kpis_morosidad_cliente_mxn"]
+             .select("NOMBRE_CLIENTE").distinct().orderBy("NOMBRE_CLIENTE")
+             .limit(8).collect()]
+    assert len(names) == 8
+
+    def fetch(name):
+        q = urllib.parse.urlencode({"cliente": name})
+        return name, _get(f"{dash_server}/clientes?{q}")[1]
+
+    with ThreadPoolExecutor(len(names)) as pool:
+        pages = list(pool.map(fetch, names))
+    for name, body in pages:
+        cells = _client_cells(body)
+        assert name in cells, name
+        assert set(cells) == {name}, (name, set(cells))
+
+
+def test_cache_keyed_on_applicable_filters(views, monkeypatch):
+    from prac_data_pipelines_spark.sinks.dashboard import Dashboard
+
+    collected: list[list[str]] = []
+    frame = type(views["calidad_datos"])
+    to_pandas = frame.toPandas
+
+    def counting(self):
+        collected.append(self.columns)
+        return to_pandas(self)
+
+    monkeypatch.setattr(frame, "toPandas", counting)
+    names = [r[0] for r in views["kpis_morosidad_cliente_mxn"]
+             .select("NOMBRE_CLIENTE").limit(2).collect()]
+    dash = Dashboard(views)
+    for name in names:
+        dash.render("auditoria", {"cliente": [name]})
+    # calidad_datos has no client column: one collect serves both filters
+    assert collected.count(views["calidad_datos"].columns) == 1

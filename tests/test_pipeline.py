@@ -1,10 +1,14 @@
 """End-to-end pipeline: the full view dictionary materializes with sane
-shapes, and the export sink writes an artifact per view."""
+shapes, the report-sized views are checkpointed snapshots of their plans,
+and the export sink writes an artifact per view."""
 
 from __future__ import annotations
 
 import os
+import re
 import tempfile
+
+import pytest
 
 EXPECTED_VIEWS = {
     "reporte_cxc", "movimientos_abiertos_cxc", "movimientos_cerrados_cxc",
@@ -24,12 +28,27 @@ EXPECTED_VIEWS = {
     "auditoria_nulos", "importes_atipicos", "recaudos_atipicos",
     "moras_atipicas", "resumen_auditoria", "calidad_datos",
 }
+# aggregated by currency, bucket, concept, client or column: checkpointed
+REPORT_SIZED = {n for n in EXPECTED_VIEWS if n.startswith((
+    "antiguedad_", "cartera_vencida_vs_vigente_", "resumen_", "kpis_"))} | {
+    "auditoria_nulos", "calidad_datos"}
 
 
-def test_pipeline_views(spark, sf_dir):
+@pytest.fixture(scope="module")
+def views(spark, sf_dir):
     from prac_data_pipelines_spark.pipeline import run_pipeline
 
-    views = run_pipeline(spark, sf_dir)
+    return run_pipeline(spark, sf_dir)
+
+
+def _analyzed_operators(df) -> list[str]:
+    """Operator names of the analyzed logical plan, root first."""
+    tree = df._jdf.queryExecution().analyzed().treeString()
+    return [re.sub(r"^[\s:+-]*", "", line).split(" ", 1)[0]
+            for line in tree.splitlines() if line.strip()]
+
+
+def test_pipeline_views(views):
     assert set(views) == EXPECTED_VIEWS
     counts = {name: df.count() for name, df in views.items()}
     # z-outlier audits are legitimately empty on near-uniform synthetic data
@@ -44,11 +63,69 @@ def test_pipeline_views(spark, sf_dir):
     assert counts["kpis_resumen"] == 6
 
 
-def test_pipeline_export(spark, sf_dir):
-    from prac_data_pipelines_spark.pipeline import run_pipeline
+def test_report_sized_views_are_lineage_cut(views):
+    assert len(REPORT_SIZED) == 22
+    for name in sorted(REPORT_SIZED):
+        ops = _analyzed_operators(views[name])
+        assert not [o for o in ops if o.startswith(("Join", "Aggregate"))], \
+            (name, ops)
+        assert ops[-1] == "LogicalRDD", (name, ops)
+
+
+def test_row_level_views_stay_lazy(views):
+    # movement grain: they scale with the fact table, so they are planned
+    # over the checkpointed master, never checkpointed themselves
+    for name in ("registros_totales_cxc", "saldos_cliente"):
+        ops = _analyzed_operators(views[name])
+        assert "Window" in ops and len(ops) > 1, (name, ops)
+
+
+def test_checkpointed_views_match_their_plans(spark, sf_dir, views):
+    from prac_data_pipelines_spark.operators.profile import column_profile
+    from prac_data_pipelines_spark.plans import analytics as pa
+    from prac_data_pipelines_spark.plans import kpis as pk
+    from prac_data_pipelines_spark.plans.master import (
+        AS_OF_CXC, cxc_master_from_tpch)
+    from prac_data_pipelines_spark.testing import compare_frames
+
+    master = cxc_master_from_tpch(spark, sf_dir)  # lazy: no checkpoint
+    plans = {
+        "kpis_resumen": pk.kpi_rows(master, AS_OF_CXC),
+        "kpis_concentracion_mxn": pk.concentracion_abc(master, "MXN"),
+        "antiguedad_por_cliente_mxn":
+            pa.antiguedad_por_cliente(master, AS_OF_CXC, "MXN"),
+        "cartera_vencida_vs_vigente_usd":
+            pa.cartera_vencida_vs_vigente(master, AS_OF_CXC, "USD"),
+        "calidad_datos": column_profile(master),
+    }
+    for name, plan in plans.items():
+        want = plan.toPandas()
+        assert len(want), name
+        assert compare_frames(views[name].toPandas(), want) == [], name
+
+
+@pytest.mark.parametrize("name", [
+    "kpis_limite_credito_mxn", "kpis_limite_credito_usd",
+    "kpis_morosidad_cliente_mxn", "kpis_morosidad_cliente_usd"])
+def test_per_client_kpis_dual_sorted(views, name):
+    # reference src/kpis.py:216-220,281-285: clients with a pending
+    # balance by balance descending, then the rest by name
+    rows = views[name].collect()
+    head, tail = [], []
+    for r in rows:
+        pending = r.SALDO_PENDIENTE is not None and r.SALDO_PENDIENTE > 0
+        (head if pending else tail).append(r)
+    assert head
+    want = (sorted(head, key=lambda r: (-r.SALDO_PENDIENTE, r.CLIENTE_ID))
+            + sorted(tail, key=lambda r: (r.NOMBRE_CLIENTE is None,
+                                          r.NOMBRE_CLIENTE or "",
+                                          r.CLIENTE_ID)))
+    assert rows == want
+
+
+def test_pipeline_export(views):
     from prac_data_pipelines_spark.sinks.report import export_views
 
-    views = run_pipeline(spark, sf_dir)
     subset = {k: views[k] for k in ("antiguedad_cartera_mxn", "kpis_resumen",
                                     "calidad_datos", "saldos_cliente")}
     with tempfile.TemporaryDirectory() as d:

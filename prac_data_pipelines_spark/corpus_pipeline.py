@@ -19,6 +19,7 @@ aggregations, and the final per-source rollup.
 from __future__ import annotations
 
 import argparse
+import gc
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -117,9 +118,12 @@ def curate(spark: SparkSession, sf_dir: str,
     lang = (q_doc_lang_id(spark, sf_dir)
             .select("doc_id", F.col("lang_pred").alias("idioma")))
 
-    # near-dup losers via the oracle-checked LSH machinery: keep lowest id
+    # near-dup losers via the oracle-checked LSH machinery: keep lowest id.
+    # No cache: both join sides read one reused exchange of the banded
+    # frame, so each export query hashes the text once, and nothing
+    # outlives the curation.
     from .queries.text import MINHASH_K, N_BANDS, _band_guard
-    sigs = minhash_signatures(docs).cache()
+    sigs = minhash_signatures(docs)
     bands = _band_guard(sigs.selectExpr(
         "doc_id", "sigs",
         f"explode(transform(sequence(0, {N_BANDS - 1}), b -> "
@@ -244,6 +248,12 @@ def export(spark: SparkSession, views: dict[str, DataFrame], out_dir: str,
         from .operators.ann_index import build_ivf_index
         emb = load_table(spark, sf_dir, "embeddings")
         build_ivf_index(emb, f"{out_dir}/ann_index")
+    # py4j proxies hold reference cycles (JavaObject <-> JavaMember), so
+    # the Datasets this curation executed stay reachable until CPython's
+    # cyclic GC next runs, and with them their broadcast relations in the
+    # JVM. Collecting here lets Spark's ContextCleaner free them when the
+    # one-shot curation ends, not at some later, unrelated allocation.
+    gc.collect()
 
 
 def main() -> int:

@@ -7,16 +7,19 @@ ingests daily increments into a 100 TB corpus: tokenize+hash of the whole
 history would dominate every run. This module persists the signature/band
 state once per document, ever:
 
-    <state_dir>/bands/bkt=<i>/   (doc_id, banda, sigs) parquet,
-                                 directory-partitioned by a 64-way hash
-                                 bucket of the band key
+    <state_dir>/bands/   flat parquet of (doc_id bigint, sigs array<bigint>,
+                         banda string, batch_id bigint): one file per
+                         append, brought back to a few large files by
+                         ``compact_dedup_state``
 
-Per increment, work is proportional to the BATCH plus the state rows in
-touched buckets: the new side is banded from its own text only, the old
-side is read with a ``bkt IN (...)`` partition filter (tiny batches touch
-few buckets and prune the rest at the filesystem level), and the candidate
-join is the same banded-LSH equi-join as the batch operator — never
-all-pairs, never a corpus re-scan of text.
+Per increment, work is proportional to the BATCH plus one narrow scan of
+the state: the batch is banded from its own text only, and its bands are
+broadcast into ONE banded-LSH equi-join against the state together with
+the batch's own bands — never all-pairs, never a corpus re-scan of text,
+never a shuffle of the state. The state is not partitioned: a batch of a
+few hundred docs carries band keys in every hash bucket, so a bucketed
+layout prunes nothing and costs a directory listing per bucket and one
+small file per bucket per append.
 
 Drop rule (same convention as ``q_doc_curation``'s loser set): a new doc
 is dropped when it matches an EXISTING doc at/above the threshold, or when
@@ -38,6 +41,8 @@ double-bands.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,13 +50,14 @@ from .operators.rounding import r4
 from .queries import text as _text
 from .queries.text import MINHASH_K, N_BANDS, minhash_signatures
 
-N_STATE_BUCKETS = 64
 DEFAULT_THRESHOLD = 0.5
 # batch_id sentinel for state rows written outside a streaming batch
 # (init bulk build, batch-mode increments): never equal to a real Spark
 # streaming batch_id (those are >= 0), so batch-path rows can never be
 # mistaken for the current attempt's own rows.
 NO_BATCH = -1
+# Read with a fixed schema: no footer read (a Spark job) per probe.
+STATE_SCHEMA = "doc_id bigint, sigs array<bigint>, banda string, batch_id bigint"
 
 _BAND_EXPR = (
     f"explode(transform(sequence(0, {N_BANDS - 1}), b -> "
@@ -60,11 +66,14 @@ _BAND_EXPR = (
 
 
 def _bands(docs: DataFrame) -> DataFrame:
-    """(doc_id, banda, sigs, bkt) for a document frame with a text column."""
-    return (minhash_signatures(docs)
-            .selectExpr("doc_id", "sigs", _BAND_EXPR)
-            .withColumn("bkt", F.pmod(F.hash("banda"),
-                                      F.lit(N_STATE_BUCKETS))))
+    """(doc_id, sigs, banda) for a document frame with a text column."""
+    return minhash_signatures(docs).selectExpr("doc_id", "sigs", _BAND_EXPR)
+
+
+def _state_rows(bands: DataFrame, batch_id: int) -> DataFrame:
+    """Band rows in the state's on-disk schema, tagged with ``batch_id``."""
+    return bands.select(F.col("doc_id").cast("long"), "sigs", "banda",
+                        F.lit(batch_id).cast("long").alias("batch_id"))
 
 
 def _guard_hot_bands(bands: DataFrame) -> DataFrame:
@@ -83,23 +92,22 @@ def _guard_hot_bands(bands: DataFrame) -> DataFrame:
 def init_dedup_state(docs: DataFrame, state_dir: str) -> None:
     """Build the signature/band state from an initial corpus (hot-band
     guard applied — the bulk build sees global band populations)."""
-    (_guard_hot_bands(_bands(docs))
-     .withColumn("batch_id", F.lit(NO_BATCH).cast("long"))
-     .write.mode("overwrite").partitionBy("bkt")
-     .parquet(f"{state_dir}/bands"))
+    (_state_rows(_guard_hot_bands(_bands(docs)), NO_BATCH)
+     .write.mode("overwrite").parquet(f"{state_dir}/bands"))
 
 
 def _read_state_bands(spark: SparkSession, state_dir: str) -> DataFrame:
-    """State scan that tolerates pre-batch_id states: mergeSchema keeps
-    the column visible when old and new files coexist (footer-merge cost
-    is bounded because compaction keeps the file count down), and states
-    written before the column existed read as all-NO_BATCH."""
-    st = (spark.read.option("mergeSchema", "true")
-          .parquet(f"{state_dir}/bands"))
-    if "batch_id" not in st.columns:
-        st = st.withColumn("batch_id", F.lit(NO_BATCH).cast("long"))
-    return st.withColumn("batch_id",
-                         F.coalesce("batch_id", F.lit(NO_BATCH)))
+    """The state's band rows. A state in the older bucketed layout
+    (``bkt=<i>`` directories) is refused rather than read: its bucket
+    column would ride into every probe and every append would add a file
+    per bucket. ``compact_dedup_state`` migrates it."""
+    path = f"{state_dir}/bands"
+    if any(name.startswith("bkt=") for name in os.listdir(path)):
+        raise ValueError(
+            f"{path} is a bucketed dedup state; run "
+            f"compact_dedup_state(spark, {state_dir!r}) once to migrate it "
+            f"to the flat layout")
+    return spark.read.schema(STATE_SCHEMA).parquet(path)
 
 
 def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
@@ -111,10 +119,11 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
     """Keep/drop verdict for every doc in ``new_docs`` against the state
     (and the batch itself), appending the kept docs' bands to the state.
 
-    Returns (doc_id, mantener, dup_de): ``dup_de`` is the lowest-id match
-    (existing corpus or lower-id batch doc) for dropped docs, null for
-    kept. New doc_ids must not collide with state doc_ids — use
-    content-hash or monotonic ids upstream (``ingest_text_dir`` does).
+    Returns (doc_id, mantener, dup_de) in doc_id order, one row per
+    distinct doc_id: ``dup_de`` is the lowest-id match (existing corpus
+    or lower-id batch doc) for dropped docs, null for kept. New doc_ids
+    must not collide with state doc_ids — use content-hash or monotonic
+    ids upstream (``ingest_text_dir`` does).
 
     ``batch_id`` (streaming) gives the append a replay identity: state
     rows this batch already wrote are recognized on replay — the doc is
@@ -124,104 +133,91 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
     (batch path), every self-match drops — a batch re-run of the same
     increment is a dedup, not a replay.
 
-    ``extra_probe_bands`` is a transient (doc_id, banda, sigs, bkt) set
+    ``extra_probe_bands`` is a transient (doc_id, sigs, banda) set
     joined as additional probe candidates but never appended — the
     chunked path threads earlier chunks' DROPPED docs through it so
     drop-chains behave exactly as in the one-shot join.
     """
-    import os
-
     bid = NO_BATCH if batch_id is None else int(batch_id)
-    new_bands = _bands(new_docs).cache()
-    if os.path.isdir(f"{state_dir}/bands"):
-        # driver-side literal IN over <=64 bucket ids -> static partition
-        # pruning on the state scan; the collect is bucket-cardinality,
-        # never data-sized.
-        touched = sorted({r["bkt"] for r in
-                          new_bands.select("bkt").distinct().collect()})
-        old_bands = (_read_state_bands(spark, state_dir)
-                     .filter(F.col("bkt").isin(touched)))
-    else:
-        # first increment bootstraps the state: no old side, the batch
-        # dedups against itself only
-        old_bands = (new_bands.limit(0)
-                     .withColumn("batch_id", F.lit(NO_BATCH).cast("long")))
-    if extra_probe_bands is not None:
-        old_bands = old_bands.unionByName(
-            extra_probe_bands.select("doc_id", "banda", "sigs", "bkt")
-            .withColumn("batch_id", F.lit(NO_BATCH).cast("long")))
+    # Lazy checkpoint: the probe's broadcast is the first job to compute
+    # the batch's bands, and the probe's own scan of them reads the stored
+    # blocks instead of re-hashing the text.
+    new_bands = _bands(new_docs).localCheckpoint(eager=False)
+    state = (_read_state_bands(spark, state_dir)
+             if os.path.isdir(f"{state_dir}/bands") else None)
 
+    # The probe side: the batch's own bands, the state and the transient
+    # set, with _f naming the rule a candidate pair (d1 <- batch doc,
+    # d2 <- candidate) obeys:
+    #   2  batch row: only a lower-id batch doc drops d1;
+    #   1  state row the CURRENT batch wrote: a self-match is the replayed
+    #      doc's own first attempt (re-keep), any other match drops d1;
+    #   0  any other state or transient row: every match drops d1 — a
+    #      self-match against an older batch's row is a first-delivery doc
+    #      whose text duplicates an earlier-published one (same
+    #      content-hash id, genuine drop, ADVICE r5).
+    probe = new_bands.withColumn("_f", F.lit(2))
+    if state is not None:
+        own = (F.col("batch_id") == bid) if bid != NO_BATCH else F.lit(False)
+        probe = probe.unionByName(state.select(
+            "doc_id", "sigs", "banda",
+            F.when(own, 1).otherwise(0).alias("_f")))
+    if extra_probe_bands is not None:
+        probe = probe.unionByName(
+            extra_probe_bands.select("doc_id", "sigs", "banda")
+            .withColumn("_f", F.lit(0)))
+
+    d1, d2, f = F.col("d1"), F.col("d2"), F.col("_f")
     est = F.expr(
         f"size(filter(zip_with(s1, s2, (x, y) -> x = y), v -> v)) "
         f"/ cast({MINHASH_K} as double)")
+    # The batch side is broadcast, so the state streams map-side through
+    # the join and is never shuffled. An increment too big to broadcast
+    # should be split (incremental_dedup_chunked), not shuffled against
+    # the whole state.
+    losers = (
+        F.broadcast(new_bands.select(F.col("doc_id").alias("d1"),
+                                     F.col("sigs").alias("s1"), "banda"))
+        .join(probe.select(F.col("doc_id").alias("d2"),
+                           F.col("sigs").alias("s2"), "banda", "_f"),
+              "banda")
+        .filter(F.when(f == 2, d2 < d1).when(f == 1, d2 != d1)
+                .otherwise(True))
+        .filter(r4(est) >= threshold)
+        .select(d1.alias("doc_id"), "d2",
+                F.lit(None).cast("array<bigint>").alias("sigs")))
+    # One row per batch doc: every doc enters with a null match and its
+    # signature (for the append), the losers with their candidates; the
+    # lowest candidate wins. localCheckpoint (not cache) pins one
+    # consistent verdict for both the state append below and the
+    # caller's reads, WITHOUT leaking a cached frame per call: checkpoint
+    # blocks are reclaimed by the ContextCleaner once the frame is
+    # garbage-collected. One sorted partition: the batch is bounded by
+    # the broadcast, and the caller reads the verdict in doc_id order.
+    verdict = (
+        new_bands.select("doc_id", F.lit(None).cast("long").alias("d2"),
+                         "sigs")
+        .unionByName(losers)
+        .groupBy("doc_id")
+        .agg(F.min("d2").alias("dup_de"), F.max("sigs").alias("sigs"))
+        .select(F.col("doc_id").cast("long").alias("doc_id"),
+                F.col("dup_de").isNull().alias("mantener"),
+                F.col("dup_de").cast("long").alias("dup_de"), "sigs")
+        .coalesce(1).sortWithinPartitions("doc_id")
+        .localCheckpoint())
 
-    def matches(left: DataFrame, right: DataFrame,
-                self_join: bool) -> DataFrame:
-        """Above-threshold (d1 <- loser, d2 <- kept-candidate) pairs.
-
-        The batch side (left) is broadcast: the state side then streams
-        map-side through the join — the corpus is never shuffled, so the
-        only state cost per increment is the (bucket-pruned, narrow)
-        band scan. An increment too big to broadcast should be split,
-        not shuffled against the whole state.
-
-        ``self_join`` excludes d1 == d2 pairs — required for the batch's
-        join with ITSELF. On the state probe, self-pairs are kept UNLESS
-        the state row carries the CURRENT batch_id: that row is the
-        replayed doc's own first attempt (re-keep), whereas a self-match
-        against any other batch's row is a first-delivery doc whose text
-        exactly duplicates an earlier-published one — same content-hash
-        id, genuine drop (ADVICE r5)."""
-        rbatch = (F.col("batch_id") if "batch_id" in right.columns
-                  else F.lit(NO_BATCH))
-        pairs = F.broadcast(
-            left.select(F.col("doc_id").alias("d1"),
-                        F.col("sigs").alias("s1"), "banda")
-        ).join(right.select(F.col("doc_id").alias("d2"),
-                            F.col("sigs").alias("s2"), "banda",
-                            rbatch.alias("_b2")),
-               "banda")
-        if self_join:
-            pairs = pairs.filter(F.col("d1") != F.col("d2"))
-        elif bid != NO_BATCH:
-            pairs = pairs.filter((F.col("d1") != F.col("d2"))
-                                 | (F.col("_b2") != bid))
-        return (pairs.select("d1", "d2", r4(est).alias("je"))
-                .filter(F.col("je") >= threshold)
-                .select("d1", "d2").dropDuplicates(["d1", "d2"]))
-
-    vs_old = matches(new_bands, old_bands, self_join=False)
-    vs_new = (matches(new_bands, new_bands, self_join=True)
-              .filter(F.col("d2") < F.col("d1")))
-    losers = (vs_old.unionByName(vs_new)
-              .groupBy(F.col("d1").alias("doc_id"))
-              .agg(F.min("d2").alias("dup_de")))
-    # localCheckpoint (not cache) pins one consistent verdict for both the
-    # state append below and the caller's reads, WITHOUT leaking a cached
-    # frame per call: checkpoint blocks are reclaimed by the ContextCleaner
-    # once the frame is garbage-collected, whereas a .cache() held across
-    # the return boundary lives for the session (one leak per micro-batch
-    # in the streaming foreachBatch path).
-    verdict = (new_docs.select("doc_id")
-               .join(losers, "doc_id", "left")
-               .select(F.col("doc_id").cast("long").alias("doc_id"),
-                       F.col("dup_de").isNull().alias("mantener"),
-                       F.col("dup_de").cast("long").alias("dup_de"))
-               .localCheckpoint())
-    kept_ids = verdict.filter("mantener").select("doc_id")
-    if bid != NO_BATCH:
+    kept = verdict.filter("mantener")
+    if state is not None and bid != NO_BATCH:
         # replayed docs are already banded (their first attempt wrote the
         # rows that identified the replay) — appending again would
         # double-band the state
-        own_ids = (old_bands.filter(F.col("batch_id") == bid)
-                   .select("doc_id").distinct())
-        kept_ids = kept_ids.join(own_ids, "doc_id", "left_anti")
-    kept_bands = new_bands.join(kept_ids, "doc_id", "left_semi")
-    (kept_bands.withColumn("batch_id", F.lit(bid).cast("long"))
-     .write.mode("append").partitionBy("bkt")
-     .parquet(f"{state_dir}/bands"))
-    new_bands.unpersist()
-    return verdict.orderBy("doc_id")
+        kept = kept.join(state.filter(F.col("batch_id") == bid)
+                         .select("doc_id"), "doc_id", "left_anti")
+    # the kept docs' bands re-derived from the verdict's signatures: the
+    # same rows _bands gave, without a join back to the batch
+    (_state_rows(kept.selectExpr("doc_id", "sigs", _BAND_EXPR), bid)
+     .coalesce(1).write.mode("append").parquet(f"{state_dir}/bands"))
+    return verdict.drop("sigs")
 
 
 def incremental_dedup_chunked(spark: SparkSession, new_docs: DataFrame,
@@ -247,9 +243,9 @@ def incremental_dedup_chunked(spark: SparkSession, new_docs: DataFrame,
     as the one-shot join computes it (equivalence property test includes
     a non-transitive chain).
 
-    Broadcast size is bounded by one chunk's band set; the state-side
-    cost stays bucket-pruned per chunk; the transient set is bounded by
-    the increment's dropped docs. Chunk edges come from one
+    Broadcast size is bounded by one chunk's band set; each chunk pays
+    one narrow scan of the state; the transient set is bounded by the
+    increment's dropped docs. Chunk edges come from one
     ``approx_percentile`` pass over doc_id (a fixed-size sketch — never
     an id collect, which would itself be data-sized at 100 TB)."""
     import math
@@ -296,28 +292,23 @@ def incremental_dedup_chunked(spark: SparkSession, new_docs: DataFrame,
 
 def compact_dedup_state(spark: SparkSession, state_dir: str,
                         target_file_mb: int = 128) -> dict:
-    """Standing maintenance for the band state: every increment appends up
-    to ``N_STATE_BUCKETS`` small files, so a daily pipeline accretes
-    thousands of KB-files per bucket over time — the probe scan then pays
-    one task per tiny file. Delegates to the lake compactor
-    (``sinks.lake.compact_partitions``: stage + atomic swap, per-bucket
-    rewrite), preserving the ``bkt`` directory layout the probe's
-    partition pruning depends on, and RE-APPLIES the hot-band guard:
-    appends cannot see global band populations, so a band crossing the
-    threshold between compactions is pruned here — compaction is the
-    state's maintenance point for both file count and band health.
+    """Standing maintenance for the band state: every increment appends
+    one small file, so a daily pipeline accretes a file per day — the
+    probe scan then pays one task per tiny file. Delegates to the lake
+    compactor (``sinks.lake.compact_partitions``: stage + atomic swap,
+    ``ceil(bytes / target)`` output files) and RE-APPLIES the hot-band
+    guard: appends cannot see global band populations, so a band
+    crossing the threshold between compactions is pruned here —
+    compaction is the state's maintenance point for both file count and
+    band health.
+
+    The rewrite keeps exactly the four state columns, so it also
+    migrates a state in the older bucketed layout (``bkt=<i>``
+    directories, which ``incremental_dedup`` refuses) to the flat one.
     Returns before/after file counts."""
     from .sinks.lake import compact_partitions
 
-    def guard_and_tag(df: DataFrame) -> DataFrame:
-        # pre-batch_id states compact to the current schema
-        if "batch_id" not in df.columns:
-            df = df.withColumn("batch_id", F.lit(NO_BATCH).cast("long"))
-        return _guard_hot_bands(df).withColumn(
-            "batch_id", F.coalesce("batch_id", F.lit(NO_BATCH)))
-
-    return compact_partitions(spark, f"{state_dir}/bands",
-                              target_file_mb=target_file_mb,
-                              partition_cols=["bkt"],
-                              transform=guard_and_tag,
-                              read_options={"mergeSchema": "true"})
+    return compact_partitions(
+        spark, f"{state_dir}/bands", target_file_mb=target_file_mb,
+        transform=lambda df: _guard_hot_bands(
+            df.select("doc_id", "sigs", "banda", "batch_id")))

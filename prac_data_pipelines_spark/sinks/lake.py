@@ -84,8 +84,7 @@ def bucketed_join_no_shuffle(spark: SparkSession, left_table: str,
 def compact_partitions(spark: SparkSession, path: str,
                        target_file_mb: int = 128,
                        partition_cols: list[str] | None = None,
-                       transform=None,
-                       read_options: dict | None = None) -> dict:
+                       transform=None) -> dict:
     """Small-file compaction: rewrite a parquet directory so files land
     near ``target_file_mb``. Streaming micro-batches and over-parallel
     writes leave thousands of KB-sized files; at 100 TB that turns every
@@ -122,14 +121,7 @@ def compact_partitions(spark: SparkSession, path: str,
 
     before = _count_files(path)
     n_out = max(1, math.ceil(_total_bytes(path) / (target_file_mb << 20)))
-    # read_options: e.g. mergeSchema for tables whose column set evolved
-    # across appends (the dedup state's batch_id) — without it a footer
-    # picked from an old file would silently drop the new column from
-    # the rewrite
-    reader = spark.read
-    for k, v in (read_options or {}).items():
-        reader = reader.option(k, v)
-    df = reader.parquet(path)
+    df = spark.read.parquet(path)
     if transform is not None:
         # maintenance hook: compaction is the one moment the whole table
         # streams through a rewrite anyway, so table-wide prunes (e.g. the

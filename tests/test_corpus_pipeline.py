@@ -47,6 +47,22 @@ def test_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
     assert top.count() > 0
 
 
+def test_curation_leaves_nothing_persisted(spark, tmp_path):
+    """curate + export is a one-shot job: once the export returns, the
+    session holds no persisted RDD it made (a cached signature frame used
+    to outlive every run)."""
+    from pathlib import Path
+
+    from prac_data_pipelines_spark.corpus_pipeline import curate, export
+
+    corpus = str(Path(__file__).resolve().parents[1]
+                 / "perfbench" / "data" / "corpus_sf0.01")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    export(spark, curate(spark, corpus), str(tmp_path / "out"), corpus)
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
 def test_ingest_text_dir_to_curated(spark, tmp_path):
     """Raw text files → documents schema → full curation run. One doc
     per file, deterministic content-hash ids (re-ingestion idempotent),

@@ -1,8 +1,11 @@
 """Incremental near-dup state: per-increment verdicts against the
-persisted corpus state, append-only growth, and bucket-pruned probes."""
+persisted corpus state, append-only growth, and the one-broadcast probe."""
 
 from __future__ import annotations
 
+import math
+import os
+import re
 import shutil
 import tempfile
 
@@ -72,20 +75,135 @@ def test_incremental_dedup_no_overlap_keeps_all(spark, state_dir):
     assert [r["mantener"] for r in out.collect()] == [True, True]
 
 
-def test_probe_prunes_state_partitions(spark, state_dir):
-    """The old-side scan must carry the bucket partition filter — a small
-    batch reads only the state directories its band keys hash into."""
-    from prac_data_pipelines_spark.incremental import _bands, init_dedup_state
+def _subtree(plan: str, node: str) -> str:
+    """The lines of ``plan``'s first ``node`` and everything below it."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    i = next(k for k, line in enumerate(lines) if node in line)
+    out = [lines[i]]
+    for line in lines[i + 1:]:
+        if depth(line) <= depth(lines[i]):
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
+def test_probe_is_one_broadcast_of_the_batch(spark, state_dir, monkeypatch):
+    """The verdict is ONE probe: no Spark job runs before it (no driver
+    collect of the batch's band keys), its plan broadcasts exactly one
+    relation — the batch's checkpointed bands, never the state — and the
+    state is read by one scan of the four state columns."""
+    from prac_data_pipelines_spark.incremental import (
+        incremental_dedup,
+        init_dedup_state,
+    )
 
     init_dedup_state(_docs(spark, BASE), state_dir)
-    one = _bands(_docs(spark, [(40, BASE[0][1])]))
-    touched = sorted({r["bkt"] for r in one.select("bkt").distinct().collect()})
-    probe = (spark.read.parquet(f"{state_dir}/bands")
-             .filter(F.col("bkt").isin(touched)))
-    import re
+    DataFrame = type(spark.range(0))  # the session's concrete frame class
+    sc = spark.sparkContext
+    group = "incremental-probe-test"
+    probes = []
+    checkpoint = DataFrame.localCheckpoint
 
-    explained = probe._jdf.queryExecution().toString()
-    assert re.search(r"PartitionFilters: \[bkt#\d+ IN \(", explained)
+    def spy(self, *args, **kwargs):
+        plan = self._jdf.queryExecution().executedPlan().toString()
+        if "BroadcastExchange" in plan:
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+            probes.append((plan, jobs))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    sc.setJobGroup(group, "incremental probe test")
+    try:
+        got = incremental_dedup(spark, _docs(spark, [
+            (40, BASE[0][1]),
+            (41, "a novel document that shares no words with the base set"),
+        ]), state_dir, batch_id=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [(r["doc_id"], r["mantener"], r["dup_de"]) for r in got] == [
+        (40, False, 1), (41, True, None)]
+
+    assert len(probes) == 1
+    plan, jobs_before = probes[0]
+    assert jobs_before == []
+    assert plan.count("BroadcastExchange") == 1
+    broadcast = _subtree(plan, "BroadcastExchange")
+    assert "Scan ExistingRDD" in broadcast and "FileScan" not in broadcast
+    scans = [line for line in plan.splitlines() if "FileScan" in line]
+    assert len(scans) == 1
+    read = re.search(r"ReadSchema: struct<(.*)>", scans[0]).group(1)
+    assert sorted(re.findall(r"(?:^|,)(\w+):", read)) == [
+        "banda", "batch_id", "doc_id", "sigs"]
+
+
+def test_each_append_adds_one_file_and_compaction_restores_count(
+        spark, state_dir):
+    """An append writes one file (the batch is bounded by the broadcast),
+    and compaction brings the file count back to ceil(bytes / target)."""
+    from prac_data_pipelines_spark.incremental import (
+        compact_dedup_state,
+        incremental_dedup,
+        init_dedup_state,
+    )
+
+    bands = f"{state_dir}/bands"
+
+    def files():
+        return [f for f in os.listdir(bands) if f.endswith(".parquet")]
+
+    init_dedup_state(_docs(spark, BASE), state_dir)
+    base = len(files())
+    for i in range(3):
+        incremental_dedup(spark, _docs(spark, [
+            (100 + 2 * i, BASE[0][1]),
+            (101 + 2 * i, f"append number {i} with its own fresh words "
+                          f"kappa lambda mu nu {i}")]), state_dir)
+        assert len(files()) == base + i + 1
+    size = sum(os.path.getsize(os.path.join(bands, f)) for f in files())
+    target_mb = 1
+    stats = compact_dedup_state(spark, state_dir, target_file_mb=target_mb)
+    want = math.ceil(size / (target_mb << 20))
+    assert stats["files_after"] == len(files()) == want
+
+
+def test_bucketed_state_refused_then_migrated_by_compaction(spark, state_dir):
+    """A state in the older bucketed layout (``bkt=<i>`` directories) is
+    refused with an error naming the migration, and ``compact_dedup_state``
+    rewrites it flat with the four state columns, after which it answers
+    probes as before."""
+    from prac_data_pipelines_spark.incremental import (
+        N_BANDS,
+        NO_BATCH,
+        _bands,
+        compact_dedup_state,
+        incremental_dedup,
+    )
+
+    (_bands(_docs(spark, BASE))
+     .withColumn("bkt", F.pmod(F.hash("banda"), F.lit(64)))
+     .withColumn("batch_id", F.lit(NO_BATCH).cast("long"))
+     .write.partitionBy("bkt").parquet(f"{state_dir}/bands"))
+    probe = _docs(spark, [(50, BASE[0][1])])
+    with pytest.raises(ValueError, match="compact_dedup_state"):
+        incremental_dedup(spark, probe, state_dir)
+    # the refused call wrote nothing
+    assert all(n.startswith(("bkt=", "_", "."))
+               for n in os.listdir(f"{state_dir}/bands"))
+
+    compact_dedup_state(spark, state_dir)
+    assert not any(n.startswith("bkt=")
+                   for n in os.listdir(f"{state_dir}/bands"))
+    state = spark.read.parquet(f"{state_dir}/bands")
+    assert sorted(state.columns) == ["banda", "batch_id", "doc_id", "sigs"]
+    assert state.count() == len(BASE) * N_BANDS
+    got = incremental_dedup(spark, probe, state_dir).collect()
+    assert [(r["doc_id"], r["mantener"], r["dup_de"]) for r in got] == [
+        (50, False, 1)]
 
 
 def test_cli_incremental_ingest_two_rounds(spark, tmp_path, monkeypatch):

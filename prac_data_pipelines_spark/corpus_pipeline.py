@@ -100,11 +100,17 @@ def curate(spark: SparkSession, sf_dir: str,
         _KGRAMS,
         q_doc_repetition,
     )
+    from .operators.lsh import (
+        BANDS_EXPR,
+        JACCARD_EST,
+        WORDS,
+        band_guard,
+        band_pairs,
+        minhash_signatures,
+    )
     from .queries.text import (
         CURATION_JACCARD,
         CURATION_MIN_QUALITY,
-        WORDS,
-        minhash_signatures,
         q_doc_lang_id,
         q_doc_quality,
     )
@@ -122,19 +128,10 @@ def curate(spark: SparkSession, sf_dir: str,
     # No cache: both join sides read one reused exchange of the banded
     # frame, so each export query hashes the text once, and nothing
     # outlives the curation.
-    from .queries.text import MINHASH_K, N_BANDS, _band_guard
-    sigs = minhash_signatures(docs)
-    bands = _band_guard(sigs.selectExpr(
-        "doc_id", "sigs",
-        f"explode(transform(sequence(0, {N_BANDS - 1}), b -> "
-        f"concat(b, ':', element_at(sigs, 2*b+1), ':', element_at(sigs, 2*b+2)))) AS banda"))
-    left = bands.selectExpr("doc_id AS d1", "sigs AS s1", "banda")
-    right = bands.selectExpr("doc_id AS d2", "sigs AS s2", "banda")
-    est = (f"size(filter(zip_with(s1, s2, (x, y) -> x = y), v -> v)) "
-           f"/ cast({MINHASH_K} as double)")
-    near_losers = (left.join(right, "banda")
-                   .filter(F.col("d1") < F.col("d2"))
-                   .selectExpr("d1", "d2", f"{est} AS je")
+    bands = band_guard(
+        minhash_signatures(docs).selectExpr("doc_id", "sigs", BANDS_EXPR))
+    near_losers = (band_pairs(bands)
+                   .selectExpr("d1", "d2", f"{JACCARD_EST} AS je")
                    .filter(F.col("je") >= CURATION_JACCARD)
                    .select(F.col("d2").alias("doc_id")).distinct())
 
@@ -326,7 +323,8 @@ def main() -> int:
         sf_dir = kept_dir
         build_index = False
     if args.strip_dup_spans:
-        from .queries.text import WORDS, strip_dup_spans
+        from .operators.lsh import WORDS
+        from .queries.text import strip_dup_spans
 
         docs = load_table(spark, sf_dir, "documents")
         rewritten = strip_dup_spans(docs)

@@ -12,6 +12,11 @@ state once per document, ever:
                          append, brought back to a few large files by
                          ``compact_dedup_state``
 
+The signatures, the ``banda`` keys, the hot-band guard and the Jaccard
+estimate are ``operators/lsh.py``'s, the same definitions the batch
+queries and ``corpus_pipeline.curate`` use, so the persisted bands and
+a fresh banding of the same text cannot drift apart.
+
 Per increment, work is proportional to the BATCH plus one narrow scan of
 the state: the batch is banded from its own text only, and its bands are
 broadcast into ONE banded-LSH equi-join against the state together with
@@ -46,9 +51,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.lsh import (
+    BANDS_EXPR,
+    JACCARD_EST,
+    band_guard,
+    minhash_signatures,
+)
 from .operators.rounding import r4
-from .queries import text as _text
-from .queries.text import MINHASH_K, N_BANDS, minhash_signatures
 
 DEFAULT_THRESHOLD = 0.5
 # batch_id sentinel for state rows written outside a streaming batch
@@ -59,15 +68,10 @@ NO_BATCH = -1
 # Read with a fixed schema: no footer read (a Spark job) per probe.
 STATE_SCHEMA = "doc_id bigint, sigs array<bigint>, banda string, batch_id bigint"
 
-_BAND_EXPR = (
-    f"explode(transform(sequence(0, {N_BANDS - 1}), b -> "
-    f"concat(b, ':', element_at(sigs, 2*b+1), ':', element_at(sigs, 2*b+2)))) "
-    f"AS banda")
-
 
 def _bands(docs: DataFrame) -> DataFrame:
     """(doc_id, sigs, banda) for a document frame with a text column."""
-    return minhash_signatures(docs).selectExpr("doc_id", "sigs", _BAND_EXPR)
+    return minhash_signatures(docs).selectExpr("doc_id", "sigs", BANDS_EXPR)
 
 
 def _state_rows(bands: DataFrame, batch_id: int) -> DataFrame:
@@ -76,23 +80,13 @@ def _state_rows(bands: DataFrame, batch_id: int) -> DataFrame:
                         F.lit(batch_id).cast("long").alias("batch_id"))
 
 
-def _guard_hot_bands(bands: DataFrame) -> DataFrame:
-    """Drop bands shared by more than ``queries.text.MAX_BAND_DOCS`` docs —
-    the same recall/cost trade as the batch operator's band guard: members
-    of a mega-band (corpus-wide boilerplate minimizers) stay reachable
-    through their other, discriminative bands, and without the guard one
-    hot band makes every probe of it scan thousands of state rows."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("banda")
-    return (bands.withColumn("_n", F.count(F.lit(1)).over(w))
-            .filter(F.col("_n") <= _text.MAX_BAND_DOCS).drop("_n"))
-
-
 def init_dedup_state(docs: DataFrame, state_dir: str) -> None:
-    """Build the signature/band state from an initial corpus (hot-band
-    guard applied — the bulk build sees global band populations)."""
-    (_state_rows(_guard_hot_bands(_bands(docs)), NO_BATCH)
+    """Build the signature/band state from an initial corpus, with the
+    batch queries' hot-band guard (``operators.lsh.band_guard``) applied —
+    the bulk build sees global band populations. Members of a mega-band
+    stay reachable through their other bands, and without the guard one
+    hot band makes every probe of it scan thousands of state rows."""
+    (_state_rows(band_guard(_bands(docs)), NO_BATCH)
      .write.mode("overwrite").parquet(f"{state_dir}/bands"))
 
 
@@ -168,9 +162,7 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
             .withColumn("_f", F.lit(0)))
 
     d1, d2, f = F.col("d1"), F.col("d2"), F.col("_f")
-    est = F.expr(
-        f"size(filter(zip_with(s1, s2, (x, y) -> x = y), v -> v)) "
-        f"/ cast({MINHASH_K} as double)")
+    est = F.expr(JACCARD_EST)
     # The batch side is broadcast, so the state streams map-side through
     # the join and is never shuffled. An increment too big to broadcast
     # should be split (incremental_dedup_chunked), not shuffled against
@@ -215,7 +207,7 @@ def incremental_dedup(spark: SparkSession, new_docs: DataFrame,
                          .select("doc_id"), "doc_id", "left_anti")
     # the kept docs' bands re-derived from the verdict's signatures: the
     # same rows _bands gave, without a join back to the batch
-    (_state_rows(kept.selectExpr("doc_id", "sigs", _BAND_EXPR), bid)
+    (_state_rows(kept.selectExpr("doc_id", "sigs", BANDS_EXPR), bid)
      .coalesce(1).write.mode("append").parquet(f"{state_dir}/bands"))
     return verdict.drop("sigs")
 
@@ -310,5 +302,5 @@ def compact_dedup_state(spark: SparkSession, state_dir: str,
 
     return compact_partitions(
         spark, f"{state_dir}/bands", target_file_mb=target_file_mb,
-        transform=lambda df: _guard_hot_bands(
+        transform=lambda df: band_guard(
             df.select("doc_id", "sigs", "banda", "batch_id")))

@@ -2,9 +2,10 @@
 
 Reference appends a TOTAL row to every analysis sheet
 (``src/analytics.py:167-174`` et al.). Spark-first shape: a one-row global
-aggregate unioned by name under the detail rows. The aggregate reuses the
-same shuffled partials as the detail aggregation when the parent is cached;
-at scale both are single-pass map-side-combined aggregations.
+aggregate unioned by name under the detail rows. The TOTAL arm reads the
+detail aggregate through a ``ReusedExchange``, so the detail aggregation's
+shuffle runs once for both arms; at scale both are single-pass
+map-side-combined aggregations.
 """
 
 from __future__ import annotations
@@ -25,13 +26,10 @@ def with_total_row(df: DataFrame, label_col: str, sum_cols: list[str],
     count columns (summed as long). Columns not covered are nulled on the
     TOTAL row unless ``const`` supplies a literal override.
 
-    The parent is cached: Spark shares no mid-plan results across union
-    arms, so without it the TOTAL arm re-executes the entire detail
-    aggregation subtree — one extra base-table scan per report at scale.
-    Callers pass post-aggregation frames (bucket/summary rows), so the
-    pinned footprint is the report itself, not the fact table.
+    Nothing is cached: Spark plans the TOTAL arm's scan of ``df`` as a
+    ``ReusedExchange`` of the detail arm's aggregate exchange, and callers
+    that read the frame more than once checkpoint the whole union.
     """
-    df = df.cache()
     aggs = [r2(F.sum(F.col(c))).alias(c) for c in sum_cols]
     aggs += [F.sum(F.col(c)).cast("long").alias(c) for c in (int_sum_cols or [])]
     total = df.agg(*aggs) if aggs else df.limit(1).select()

@@ -1976,30 +1976,24 @@ register("bpe_fertility", q_bpe_fertility, SQL_BPE_FERTILITY)
 BATCH_DOCS = 16
 
 
-def doc_length_buckets_frame(docs: DataFrame,
-                             materialize: bool = True) -> DataFrame:
+def doc_length_buckets_frame(docs: DataFrame) -> DataFrame:
     """Both batching policies over a documents frame; shared by the
     registered query and the Python-reference property test.
 
-    ``materialize=False`` keeps the frame fully lazy (for callers that
-    only want the plan, e.g. the property test's shape assertions) —
-    the default eagerly cuts the fan-out, see below.
+    Not lazy: the per-doc token counts are checkpointed eagerly, so
+    building the frame runs one Spark job (see below).
     """
     from ..operators.sorting import grouped_positions
 
-    t = docs.selectExpr("doc_id", "source",
-                        f"cast(size({WORDS}) as bigint) AS toks")
     # t feeds BOTH batching rankings (each fanning out inside
     # grouped_positions) plus the base aggregate — without materialization
     # the tokenize+size pass re-executes up to ~5x (measured 3.10 s;
     # with this one localCheckpoint of the narrow per-doc frame: 1.98 s,
     # 0.64x — r10 A/B min-of-3). The checkpointed frame is (doc_id,
-    # source, toks): per-doc grain, never the text. Opt-in (ADVICE-r10):
-    # an unconditional eager checkpoint ran a Spark job at DataFrame-
-    # CONSTRUCTION time, so every caller paid the materialization even
-    # before any action and the helper could not compose lazily.
-    if materialize:
-        t = t.localCheckpoint()
+    # source, toks): per-doc grain, never the text.
+    t = (docs.selectExpr("doc_id", "source",
+                         f"cast(size({WORDS}) as bigint) AS toks")
+         .localCheckpoint())
 
     def waste(ranked, tag: str) -> DataFrame:
         batch = F.floor((F.col("_rn") - 1) / BATCH_DOCS)

@@ -136,7 +136,7 @@ register("multimodal_frames", q_multimodal_frames, SQL_MULTIMODAL_FRAMES)
 
 from ..operators.multimodal import PHASH_BITS, dhash_images  # noqa: E402
 from ..operators.rounding import r6  # noqa: E402
-from .text import MAX_BAND_DOCS, _band_guard  # noqa: E402
+from ..operators.lsh import MAX_BAND_DOCS, band_guard, band_pairs  # noqa: E402
 
 PH_BANDS = 4
 PH_BAND_BITS = 16  # band 3 carries the top 15 of the 63 bits
@@ -182,7 +182,7 @@ def _phashes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _phash_bands(ph: DataFrame) -> DataFrame:
-    return _band_guard(ph.selectExpr(
+    return band_guard(ph.selectExpr(
         "doc_id", "phash",
         f"explode(transform(sequence(0, {PH_BANDS - 1}), b -> "
         f"concat(b, ':', (shiftright(phash, b * {PH_BAND_BITS}) "
@@ -193,14 +193,9 @@ def q_multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache: the banded frame feeds both sides of the self-join — without
     # it the Arrow hash stage runs twice over the corpus
     bands = _phash_bands(_phashes(spark, sf_dir)).cache()
-    left = bands.select(F.col("doc_id").alias("d1"),
-                        F.col("phash").alias("p1"), "banda")
-    right = bands.select(F.col("doc_id").alias("d2"),
-                         F.col("phash").alias("p2"), "banda")
     return (
-        left.join(right, "banda")
-        .filter(F.col("d1") < F.col("d2"))
-        .withColumn("hamming", F.expr("bit_count(p1 ^ p2)").cast("long"))
+        band_pairs(bands)
+        .withColumn("hamming", F.expr("bit_count(s1 ^ s2)").cast("long"))
         .filter(F.col("hamming") <= PH_MAX_HAMMING)
         .dropDuplicates(["d1", "d2"])
         .select("d1", "d2", "hamming")
@@ -252,11 +247,7 @@ def q_multimodal_phash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
              .withColumn("hamming", F.expr("bit_count(p1 ^ p2)").cast("long"))
              .filter(F.col("hamming") <= PH_AUDIT_MAX_H)
              .select("d1", "d2", "hamming"))
-    cand = (_phash_bands(audit)
-            .select(F.col("doc_id").alias("d1"), "banda")
-            .join(_phash_bands(audit).select(F.col("doc_id").alias("d2"),
-                                             "banda"), "banda")
-            .filter(F.col("d1") < F.col("d2"))
+    cand = (band_pairs(_phash_bands(audit).select("doc_id", "banda"))
             .select("d1", "d2")
             .dropDuplicates(["d1", "d2"])
             .withColumn("_caught", F.lit(1)))

@@ -18,26 +18,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.lsh import (
+    BANDS_EXPR,
+    JACCARD_EST,
+    MAX_BAND_DOCS,
+    MINHASH_K,
+    MINHASH_P,
+    N_BANDS,
+    SIGS,
+    WORDS,
+    _A,
+    _B,
+    _SHINGLES_WS,
+    _h,
+    band_guard,
+    band_pairs,
+    minhash_signatures,
+)
 from ..operators.rounding import r4, r6
 from ..sources import load_table
 from . import register
 
 # --------------------------------------------------------------------------
-# Shared tokenization / hashing (Spark SQL expression + DuckDB twin)
+# Shared tokenization / hashing. The Spark-side MinHash-LSH definitions
+# (WORDS, _SHINGLES_WS, _h, the MinHash parameters, SIGS, the band keys,
+# the estimate, the hot-band guard and the band self-join) live in
+# operators/lsh.py, shared with the curation and the incremental dedup
+# state; their DuckDB twins below are built from the same constants.
 # --------------------------------------------------------------------------
 
-# words: split on whitespace runs
-WORDS = "split(trim(text), '\\\\s+')"
 SQL_WORDS = "str_split_regex(trim(text), '\\s+')"
 
-# 3-word shingles (guarded for short docs)
-SHINGLES = (
-    f"CASE WHEN size({WORDS}) >= 3 THEN "
-    f"transform(sequence(0, size({WORDS}) - 3), "
-    f"i -> concat_ws(' ', element_at({WORDS}, i+1), element_at({WORDS}, i+2), "
-    f"element_at({WORDS}, i+3))) "
-    f"ELSE array(trim(text)) END"
-)
+# DuckDB twin of lsh._SHINGLES_WS: 3-word shingles, guarded for short docs
 SQL_SHINGLES = (
     f"CASE WHEN len({SQL_WORDS}) >= 3 THEN "
     f"list_transform(range(0, len({SQL_WORDS}) - 2), "
@@ -45,40 +57,13 @@ SQL_SHINGLES = (
     f"ELSE [trim(text)] END"
 )
 
-# 28-bit base hash of a string s (identical on both engines)
-def _h(s: str) -> str:
-    return f"cast(conv(substring(md5({s}), 1, 7), 16, 10) as bigint)"
 
-
+# DuckDB twin of lsh._h, the 28-bit base hash of a string s
 def _sql_h(s: str) -> str:
     return f"('0x' || substr(md5({s}), 1, 7))::BIGINT"
 
 
-# MinHash parameters: k permutations (a*h + b) mod p over the base hash.
-# The multipliers must be pairwise INDEPENDENT: with the naive
-# a_i = c*(i+1), every permutation of hash h is (c*h)*(i+1)+b_i, so one
-# shingle whose c*h mod p is tiny wins the minimum under ALL permutations
-# of every doc containing it — near-disjoint docs then collide with
-# estimated Jaccard 1.0 (observed on the synthetic corpus: est 1.0 vs
-# exact 0.013). Distinct powers c^(i+1) mod p carry no linear relation.
-MINHASH_K = 8
-MINHASH_P = 2147483647
-_A = [pow(2654435761, i + 1, MINHASH_P) for i in range(MINHASH_K)]
-_B = [pow(40503, i + 3, MINHASH_P) for i in range(MINHASH_K)]
-N_BANDS = 4  # bands of 2 rows each
-
-# Single-pass fold: one traversal of the shingle hashes carries all K
-# running minima. The naive form — transform(perms, i -> array_min(map hs))
-# — re-evaluates the (md5) hash array once per permutation at runtime
-# because lambda bodies multiply evaluation counts that Catalyst's
-# CollapseProject cannot see. The fold evaluates _hs exactly once.
-SIGS = (
-    f"aggregate(_hs, "
-    f"transform(sequence(0, {MINHASH_K - 1}), i -> {MINHASH_P}L), "
-    f"(acc, h) -> zip_with(acc, sequence(0, {MINHASH_K - 1}), (m, i) -> "
-    f"least(m, (element_at(array({','.join(str(a) + 'L' for a in _A)}), i+1) * h + "
-    f"element_at(array({','.join(str(b) + 'L' for b in _B)}), i+1)) % {MINHASH_P}L)))"
-)
+# DuckDB twin of lsh.SIGS
 SQL_SIGS = (
     f"list_transform(range(0, {MINHASH_K}), i -> "
     f"list_min(list_transform(hs, h -> "
@@ -92,27 +77,9 @@ def _docs(spark: SparkSession, sf_dir: str,
     return load_table(spark, sf_dir, "documents", parallelize=parallelize)
 
 
-# Hot-band guard: a band key shared by a huge doc population (corpus-wide
-# boilerplate minimizers) would make the within-bucket self-join quadratic
-# in that bucket. Bands larger than this are dropped from candidate
-# generation on BOTH engines — the standard LSH recall/cost trade: members
-# of a mega-band are near-dups of thousands of docs and are still reachable
-# through their other (discriminative) bands.
-MAX_BAND_DOCS = 1000
-
-
-def _band_guard(bands: DataFrame) -> DataFrame:
-    """Filter out hot bands. The count window partitions by ``banda`` —
-    the same key the candidate join shuffles on, so the window's exchange
-    is reused by the join (no extra shuffle)."""
-    w = Window.partitionBy("banda")
-    return (bands.withColumn("_n", F.count(F.lit(1)).over(w))
-            .filter(F.col("_n") <= MAX_BAND_DOCS).drop("_n"))
-
-
-# DuckDB twin of the banding + guard (two CTEs: DuckDB can't nest a window
-# inside the expression that defines its partition key). Expects a `sigs`
-# CTE with (doc_id, sigs) in scope.
+# DuckDB twin of lsh.BANDS_EXPR + lsh.band_guard (two CTEs: DuckDB can't
+# nest a window inside the expression that defines its partition key).
+# Expects a `sigs` CTE with (doc_id, sigs) in scope.
 SQL_BANDS_CTE = f"""bands0 AS (
   SELECT doc_id, sigs, concat(b, ':', sigs[2*b+1], ':', sigs[2*b+2]) AS banda
   FROM sigs CROSS JOIN (SELECT unnest(range(0, {N_BANDS})) AS b)
@@ -509,55 +476,20 @@ register("doc_fingerprint", q_doc_fingerprint, SQL_DOC_FINGERPRINT)
 # computation is a per-row map. This is THE scale path for near-dedup.
 # --------------------------------------------------------------------------
 
-# Shingles over a pre-projected words array (single split per row; the
-# inline form re-splits the text for every element_at).
-_SHINGLES_WS = (
-    "CASE WHEN size(_ws) >= 3 THEN "
-    "transform(sequence(0, size(_ws) - 3), "
-    "i -> concat_ws(' ', element_at(_ws, i+1), element_at(_ws, i+2), "
-    "element_at(_ws, i+3))) "
-    "ELSE array(trim(text)) END"
-)
-
-
-def _with_sigs(docs: DataFrame) -> DataFrame:
-    return (
-        docs.selectExpr("doc_id", "text", f"{WORDS} AS _ws")
-        .selectExpr("doc_id", f"{_SHINGLES_WS} AS _sh")
-        .selectExpr("doc_id", f"transform(_sh, s -> {_h('s')}) AS _hs")
-        .selectExpr("doc_id", f"{SIGS} AS sigs")
-    )
-
-
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """Public dedup API: (doc_id, sigs array<bigint>) MinHash signatures."""
-    return _with_sigs(docs)
-
-
 def q_doc_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     # The signature frame feeds both sides of the band self-join and the
     # estimate projection — cache so signatures are computed once.
-    sigs = _with_sigs(docs).cache()
-    bands = _band_guard(sigs.selectExpr(
-        "doc_id", "sigs",
-        f"explode(transform(sequence(0, {N_BANDS - 1}), b -> "
-        f"concat(b, ':', element_at(sigs, 2*b+1), ':', element_at(sigs, 2*b+2)))) AS banda",
-    ))
-    left = bands.select(F.col("doc_id").alias("d1"), F.col("sigs").alias("s1"), "banda")
-    right = bands.select(F.col("doc_id").alias("d2"), F.col("sigs").alias("s2"), "banda")
-    est = F.expr(
-        f"size(filter(zip_with(s1, s2, (x, y) -> x = y), v -> v)) / cast({MINHASH_K} as double)"
-    )
+    sigs = minhash_signatures(docs).cache()
+    bands = band_guard(sigs.selectExpr("doc_id", "sigs", BANDS_EXPR))
     # estimate + threshold BEFORE the pair dedup: the estimate is a pure
     # function of the pair's signatures, so every banded duplicate of a
     # pair yields the same value — and the dedup shuffle then carries only
     # (d1, d2, est) for above-threshold pairs instead of two K-element
     # signature arrays for every banded candidate
     return (
-        left.join(right, "banda")
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", r4(est).alias("jaccard_est"))
+        band_pairs(bands)
+        .select("d1", "d2", r4(F.expr(JACCARD_EST)).alias("jaccard_est"))
         .filter(F.col("jaccard_est") >= 0.25)
         .dropDuplicates(["d1", "d2"])
         .orderBy("d1", "d2")
@@ -597,12 +529,6 @@ register("doc_minhash_pairs", q_doc_minhash_pairs, SQL_DOC_MINHASH_PAIRS)
 # longer collapse a huge doc population into one quadratic bucket.
 # --------------------------------------------------------------------------
 
-_BANDS_EXPR = (
-    f"explode(transform(sequence(0, {N_BANDS - 1}), b -> "
-    f"concat(b, ':', element_at(sigs, 2*b+1), ':', element_at(sigs, 2*b+2)))) AS banda"
-)
-
-
 def q_doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     sh = (docs.selectExpr("doc_id", "text", f"{WORDS} AS _ws")
@@ -610,11 +536,9 @@ def q_doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow (doc_id, banda) frame feeds both sides of the self-join —
     # cache it, or the signature computation (one md5 per shingle) runs
     # twice over the full corpus
-    bands = _band_guard(_with_sigs(docs).selectExpr("doc_id", _BANDS_EXPR)).cache()
+    bands = band_guard(minhash_signatures(docs).selectExpr("doc_id", BANDS_EXPR)).cache()
     cand = (
-        bands.select(F.col("doc_id").alias("d1"), "banda")
-        .join(bands.select(F.col("doc_id").alias("d2"), "banda"), "banda")
-        .filter(F.col("d1") < F.col("d2"))
+        band_pairs(bands)
         .select("d1", "d2")
         .dropDuplicates(["d1", "d2"])
     )
@@ -761,18 +685,10 @@ CROSS_DUP_THRESHOLD = 0.5
 def q_source_cross_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     src = docs.select("doc_id", "source")
-    sigs = _with_sigs(docs).cache()
-    bands = _band_guard(sigs.selectExpr("doc_id", "sigs", _BANDS_EXPR))
-    left = bands.select(F.col("doc_id").alias("d1"),
-                        F.col("sigs").alias("s1"), "banda")
-    right = bands.select(F.col("doc_id").alias("d2"),
-                         F.col("sigs").alias("s2"), "banda")
-    est = F.expr(
-        f"size(filter(zip_with(s1, s2, (x, y) -> x = y), v -> v)) "
-        f"/ cast({MINHASH_K} as double)")
-    pairs = (left.join(right, "banda")
-             .filter(F.col("d1") < F.col("d2"))
-             .select("d1", "d2", r4(est).alias("je"))
+    sigs = minhash_signatures(docs).cache()
+    bands = band_guard(sigs.selectExpr("doc_id", "sigs", BANDS_EXPR))
+    pairs = (band_pairs(bands)
+             .select("d1", "d2", r4(F.expr(JACCARD_EST)).alias("je"))
              .filter(F.col("je") >= CROSS_DUP_THRESHOLD)
              .dropDuplicates(["d1", "d2"]))
     j = (pairs
@@ -1042,12 +958,10 @@ def q_doc_minhash_containment(spark: SparkSession,
     docs = _docs(spark, sf_dir, parallelize=True)
     sh = (docs.selectExpr("doc_id", "text", f"{WORDS} AS _ws")
           .selectExpr("doc_id", f"array_distinct({_SHINGLES_WS}) AS sh"))
-    bands = _band_guard(
-        _with_sigs(docs).selectExpr("doc_id", _BANDS_EXPR)).cache()
+    bands = band_guard(
+        minhash_signatures(docs).selectExpr("doc_id", BANDS_EXPR)).cache()
     cand = (
-        bands.select(F.col("doc_id").alias("d1"), "banda")
-        .join(bands.select(F.col("doc_id").alias("d2"), "banda"), "banda")
-        .filter(F.col("d1") < F.col("d2"))
+        band_pairs(bands)
         .select("d1", "d2")
         .dropDuplicates(["d1", "d2"]))
     verified = (
@@ -1366,18 +1280,13 @@ def q_doc_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache: the banded frame feeds BOTH sides of the self-join — without
     # it the fingerprint computation (one md5 per word) runs twice over
     # the corpus (same pattern as doc_ngram_jaccard's band cache)
-    bands = _band_guard(sim.selectExpr(
+    bands = band_guard(sim.selectExpr(
         "doc_id", "simhash",
         f"explode(transform(sequence(0, {SIMHASH_P_BANDS - 1}), b -> "
         f"concat(b, ':', (shiftright(simhash, b * {SIMHASH_P_BAND_BITS}) "
         f"& {2 ** SIMHASH_P_BAND_BITS - 1})))) AS banda")).cache()
-    left = bands.select(F.col("doc_id").alias("d1"),
-                        F.col("simhash").alias("s1"), "banda")
-    right = bands.select(F.col("doc_id").alias("d2"),
-                         F.col("simhash").alias("s2"), "banda")
     return (
-        left.join(right, "banda")
-        .filter(F.col("d1") < F.col("d2"))
+        band_pairs(bands)
         # hamming filter BEFORE the pair dedup: bit_count is per-row and
         # deterministic, so filtering first is identical — and the dedup
         # shuffle then carries only the pairs within threshold instead of
@@ -2054,10 +1963,8 @@ def q_doc_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             .selectExpr("doc_id", "array_distinct(_hs) AS ghs",
                         f"{SIGS} AS sigs")
             .cache())
-    bands = _band_guard(base.selectExpr("doc_id", "sigs", _BANDS_EXPR))
-    cand = (bands.select(F.col("doc_id").alias("d1"), "banda")
-            .join(bands.select(F.col("doc_id").alias("d2"), "banda"), "banda")
-            .filter(F.col("d1") < F.col("d2"))
+    bands = band_guard(base.selectExpr("doc_id", BANDS_EXPR))
+    cand = (band_pairs(bands)
             .select("d1", "d2")
             .dropDuplicates(["d1", "d2"]))
     paired = (cand
@@ -2067,9 +1974,7 @@ def q_doc_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
               .join(base.select(F.col("doc_id").alias("d2"),
                                 F.col("ghs").alias("g2"),
                                 F.col("sigs").alias("s2")), "d2"))
-    est = F.expr(
-        f"size(filter(zip_with(s1, s2, (x, y) -> x = y), v -> v)) "
-        f"/ cast({MINHASH_K} as double)")
+    est = F.expr(JACCARD_EST)
     inter = F.expr("size(array_intersect(g1, g2))").cast("double")
     union = (F.expr("size(g1) + size(g2)").cast("double") - inter)
     scored = paired.select(
@@ -2290,7 +2195,7 @@ _CORR_SIGNALS = ("calidad", "toks", "rep3", "stop")
 def q_doc_signal_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     # stage the split and the shingle array as multiply-referenced
-    # columns: a raw inline SHINGLES re-splits the text per lambda
+    # columns: an inline shingle expression re-splits the text per lambda
     # element (measured 6.5 s vs 0.4 s at sf0.1, single task —
     # SCALING.md)
     base = (docs.selectExpr("doc_id", "text", f"{WORDS} AS _ws")
@@ -2477,12 +2382,10 @@ def q_simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     sh = (docs.selectExpr("doc_id", "text", f"{WORDS} AS _ws")
           .selectExpr("doc_id", f"array_distinct({_SHINGLES_WS}) AS sh"))
-    bands = _band_guard(
-        _with_sigs(docs).selectExpr("doc_id", _BANDS_EXPR)).cache()
+    bands = band_guard(
+        minhash_signatures(docs).selectExpr("doc_id", BANDS_EXPR)).cache()
     cand = (
-        bands.select(F.col("doc_id").alias("d1"), "banda")
-        .join(bands.select(F.col("doc_id").alias("d2"), "banda"), "banda")
-        .filter(F.col("d1") < F.col("d2"))
+        band_pairs(bands)
         .select("d1", "d2")
         .dropDuplicates(["d1", "d2"]))
     jac = ("floor(size(array_intersect(sh1, sh2)) / cast(size(sh1) "
@@ -2612,21 +2515,10 @@ def q_corpus_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache())
     s2 = flagged.filter("_in2").drop("_in2", "_in3")
     s3 = flagged.filter("_in3").drop("_in2", "_in3")
-    sigs = _with_sigs(s3).cache()
-    bands = _band_guard(sigs.selectExpr(
-        "doc_id", "sigs",
-        f"explode(transform(sequence(0, {N_BANDS - 1}), b -> "
-        f"concat(b, ':', element_at(sigs, 2*b+1), ':', "
-        f"element_at(sigs, 2*b+2)))) AS banda"))
-    left = bands.select(F.col("doc_id").alias("d1"),
-                        F.col("sigs").alias("s1"), "banda")
-    right = bands.select(F.col("doc_id").alias("d2"),
-                         F.col("sigs").alias("s2"), "banda")
-    est = F.expr(f"size(filter(zip_with(s1, s2, (x, y) -> x = y), v -> v))"
-                 f" / cast({MINHASH_K} as double)")
-    losers = (left.join(right, "banda")
-              .filter(F.col("d1") < F.col("d2"))
-              .select("d2", r4(est).alias("_est"))
+    sigs = minhash_signatures(s3).cache()
+    bands = band_guard(sigs.selectExpr("doc_id", "sigs", BANDS_EXPR))
+    losers = (band_pairs(bands)
+              .select("d2", r4(F.expr(JACCARD_EST)).alias("_est"))
               .filter(F.col("_est") >= CURATION_JACCARD)
               .select(F.col("d2").alias("doc_id")).distinct())
     # narrow the s4 cache to per-doc scalars (ADVICE-r10): the quality

@@ -3,6 +3,10 @@ kept set is disjoint from every drop reason."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 from pyspark.sql import functions as F
 
 
@@ -61,6 +65,20 @@ def test_curation_leaves_nothing_persisted(spark, tmp_path):
     before = set(jsc.getPersistentRDDs().keys())
     export(spark, curate(spark, corpus), str(tmp_path / "out"), corpus)
     assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
+def test_corpus_product_imports_no_query_registry():
+    """Importing the corpus product loads no ``queries`` module: the
+    MinHash-LSH definitions it shares with the registry live in
+    ``operators/lsh.py``."""
+    code = ("import sys, prac_data_pipelines_spark.corpus_pipeline, "
+            "prac_data_pipelines_spark.incremental; "
+            "print(sorted(m for m in sys.modules "
+            "if m.startswith('prac_data_pipelines_spark.queries')))")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "[]"
 
 
 def test_ingest_text_dir_to_curated(spark, tmp_path):

@@ -33,10 +33,10 @@ BASE = [
 
 def test_incremental_dedup_verdicts_and_state_growth(spark, state_dir):
     from prac_data_pipelines_spark.incremental import (
-        N_BANDS,
         incremental_dedup,
         init_dedup_state,
     )
+    from prac_data_pipelines_spark.operators.lsh import N_BANDS
 
     init_dedup_state(_docs(spark, BASE), state_dir)
     batch = _docs(spark, [
@@ -177,12 +177,12 @@ def test_bucketed_state_refused_then_migrated_by_compaction(spark, state_dir):
     rewrites it flat with the four state columns, after which it answers
     probes as before."""
     from prac_data_pipelines_spark.incremental import (
-        N_BANDS,
         NO_BATCH,
         _bands,
         compact_dedup_state,
         incremental_dedup,
     )
+    from prac_data_pipelines_spark.operators.lsh import N_BANDS
 
     (_bands(_docs(spark, BASE))
      .withColumn("bkt", F.pmod(F.hash("banda"), F.lit(64)))
@@ -550,7 +550,7 @@ def test_cross_batch_exact_dup_with_content_hash_ids(spark, state_dir,
     assert b2[100] == (False, 100)
     assert b2[102] == (True, None)
     # and the state holds ONE copy of the duplicate's bands
-    from prac_data_pipelines_spark.incremental import N_BANDS
+    from prac_data_pipelines_spark.operators.lsh import N_BANDS
 
     state = spark.read.parquet(f"{state_dir}/bands")
     assert state.filter(F.col("doc_id") == 100).count() == N_BANDS
@@ -560,13 +560,13 @@ def test_hot_band_guard_at_init_and_compaction(spark, state_dir, monkeypatch):
     """Mega-bands are pruned when the full state is visible: at init, and
     at compaction for bands that crossed the threshold via appends."""
     from prac_data_pipelines_spark import incremental
-    from prac_data_pipelines_spark.queries import text as text_mod
+    from prac_data_pipelines_spark.operators import lsh
 
     boiler = "the same boilerplate text repeated across the whole corpus"
     distinct = "one genuinely distinct document amid the noise"
 
     # init guard: with threshold 3, the 5-doc boilerplate band is dropped
-    monkeypatch.setattr(text_mod, "MAX_BAND_DOCS", 3)
+    monkeypatch.setattr(lsh, "MAX_BAND_DOCS", 3)
     docs = _docs(spark, [(i, boiler) for i in range(5)] + [(10, distinct)])
     incremental.init_dedup_state(docs, state_dir)
     state = spark.read.parquet(f"{state_dir}/bands")
@@ -580,12 +580,12 @@ def test_hot_band_guard_at_init_and_compaction(spark, state_dir, monkeypatch):
 
     # compaction guard: raise the threshold, append clones legitimately,
     # lower it back — compaction prunes the now-hot band
-    monkeypatch.setattr(text_mod, "MAX_BAND_DOCS", 1000)
+    monkeypatch.setattr(lsh, "MAX_BAND_DOCS", 1000)
     for i in range(4):
         incremental.incremental_dedup(
             spark, _docs(spark, [(200 + i, f"{boiler} variant {i} " * 3)]),
             state_dir)
-    monkeypatch.setattr(text_mod, "MAX_BAND_DOCS", 3)
+    monkeypatch.setattr(lsh, "MAX_BAND_DOCS", 3)
     incremental.compact_dedup_state(spark, state_dir)
     pops = (spark.read.parquet(f"{state_dir}/bands")
             .groupBy("banda").count().agg(F.max("count")).collect()[0][0])

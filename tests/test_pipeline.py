@@ -146,3 +146,15 @@ def test_pipeline_export(views):
             root = ET.fromstring(zf.read("xl/workbook.xml"))
         sheets = [s.get("name") for s in root.findall(".//m:sheet", ns)]
         assert sheets == ["antiguedad_cartera_mxn", "kpis_resumen"]
+
+
+def test_repeated_run_pipeline_caches_nothing(spark, sf_dir, views):
+    """A second ``run_pipeline`` call leaves the CacheManager as it found
+    it: the views are checkpoint snapshots, so no frame inside them is
+    cached, and repeated calls (a dashboard refresh) accrete nothing."""
+    from prac_data_pipelines_spark.pipeline import run_pipeline
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+    run_pipeline(spark, sf_dir)
+    assert cache.cachedData().size() == before

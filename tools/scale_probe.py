@@ -38,14 +38,14 @@ def probe_llm(spark, sf_dir: str, k: int) -> None:
     original becomes a k-member identity cluster) and run the REAL
     registered queries against the replicated directory. Also reports the
     LSH band-bucket size distribution, the quantity the hot-band guard
-    (queries/text.py MAX_BAND_DOCS) bounds."""
+    (operators/lsh.py MAX_BAND_DOCS) bounds."""
     import shutil
     import tempfile
 
     from prac_data_pipelines_spark.queries import all_queries
-    from prac_data_pipelines_spark.queries.text import (
+    from prac_data_pipelines_spark.operators.lsh import (
+        BANDS_EXPR,
         MAX_BAND_DOCS,
-        N_BANDS,
         minhash_signatures,
     )
 
@@ -60,10 +60,7 @@ def probe_llm(spark, sf_dir: str, k: int) -> None:
 
     # band-bucket size distribution (pre-guard): the in-bucket join cost is
     # sum(n_b^2), so the max bucket is the scale risk the guard caps
-    bands = minhash_signatures(docs).selectExpr(
-        "doc_id",
-        f"explode(transform(sequence(0, {N_BANDS - 1}), b -> "
-        f"concat(b, ':', element_at(sigs, 2*b+1), ':', element_at(sigs, 2*b+2)))) AS banda")
+    bands = minhash_signatures(docs).selectExpr("doc_id", BANDS_EXPR)
     dist = (bands.groupBy("banda").count()
             .selectExpr("max(count) AS max_b",
                         "percentile_approx(count, 0.99) AS p99_b",
